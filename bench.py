@@ -224,6 +224,14 @@ def _loadavg() -> list[float] | None:
         return None
 
 
+def _bench_cpus() -> int:
+    """Cores the bench session runs on: ``$SPARK_GRAFT_CPUS`` (what
+    ``get_spark`` builds ``local[N]`` from), else the affinity count
+    ``local[*]`` resolves to."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
@@ -326,6 +334,7 @@ def main() -> None:
         "load_avg_start": load_start,
         "load_avg_end": load_end,
         "ncpus": os.cpu_count(),
+        "cpus": _bench_cpus(),
         "sf": sf,
     }
     if scale_probe is not None:
@@ -348,6 +357,7 @@ def main() -> None:
         "regressions": (delta or {}).get("regressions"),
         "regressions_basis": (delta or {}).get("regressions_basis"),
         "load_avg": {"start": load_start, "end": detail["load_avg_end"]},
+        "cpus": detail["cpus"],
         "sf": sf,
     }
     if scale_probe is not None:
@@ -434,10 +444,14 @@ def _regression_flag(ratio: float, base_s: float, cur_s: float) -> bool:
 def _delta_vs_previous(
     timings: dict[str, float], timings_min: dict[str, float]
 ) -> dict | None:
-    """Per-query ratio vs the most recent recorded BENCH_r{N}.json, with
-    >1.3x slowdowns called out — so a reader sees regressions in the
-    bench artifact itself instead of recomputing across rounds. Only
-    same-sf artifacts are compared (ratios across sf are meaningless).
+    """Per-query ratio vs the most recent recorded BENCH_r{N}.json taken
+    at the SAME sf and the SAME core count, with >1.3x slowdowns called
+    out — so a reader sees regressions in the bench artifact itself
+    instead of recomputing across rounds. Ratios across sf or core
+    counts are meaningless (at sf0.1 a low-core run is fixed-cost bound
+    and reads as phantom speedups or regressions), so with no like
+    baseline there is no delta and the stdout line reports
+    ``"delta_vs": null``; there is no fallback to another core count.
 
     ``ratio`` stays median-basis for series continuity; ``regressions``
     is computed MIN-basis (current min vs the previous artifact's min
@@ -451,21 +465,10 @@ def _delta_vs_previous(
     here = os.path.dirname(os.path.abspath(__file__))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
+    cpus = _bench_cpus()
     prev_name, prev = None, None
-    # Measurement-bug fix (r14): the driver also records LOW-CORE-COUNT
-    # artifacts (BENCH_r13_c8.json) for the scaling block; the round-int
-    # sort tie-broke toward them, so this 32-core run's delta (and its
-    # `regressions` flags) compared against 8-core minimums — which at
-    # this sf are FASTER (fixed-cost bound), i.e. phantom regressions
-    # waiting to fire. Core-count-suffixed artifacts are excluded from
-    # the baseline pick; the comparison series stays main-run-to-main-run.
-    candidates = [
-        p
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if not re.search(r"_c\d+\.json$", os.path.basename(p))
-    ]
     for path in sorted(
-        candidates,
+        glob.glob(os.path.join(here, "BENCH_r*.json")),
         key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
         reverse=True,
     ):
@@ -475,14 +478,15 @@ def _delta_vs_previous(
         except (OSError, json.JSONDecodeError):
             continue
         # Driver-recorded artifacts wrap this script's JSON line under
-        # "parsed" (alongside rc/tail); a local run of this script emits
-        # the line bare. Accept both — r3's delta block silently compared
-        # against nothing because it only looked at the top level.
-        if isinstance(cand.get("parsed"), dict):
-            cand = cand["parsed"]
-        if cand.get("sf") == sf and cand.get("queries"):
-            prev_name, prev = os.path.basename(path), cand["queries"]
-            prev_min = cand.get("queries_min") or {}
+        # "parsed" and record the core count beside it; a local run of
+        # this script emits the line bare, core count inside. Accept
+        # both — r3's delta block silently compared against nothing
+        # because it only looked at the top level.
+        line = cand["parsed"] if isinstance(cand.get("parsed"), dict) else cand
+        cores = line.get("cpus", cand.get("cpus"))
+        if line.get("sf") == sf and cores == cpus and line.get("queries"):
+            prev_name, prev = os.path.basename(path), line["queries"]
+            prev_min = line.get("queries_min") or {}
             break
     if prev is None:
         return None

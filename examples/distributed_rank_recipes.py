@@ -2,29 +2,29 @@
 window results (ranks, ntile buckets, running sums) without the
 single-reducer sort that an un-partitioned ``Window.orderBy`` plans.
 
-This is the recipe users will copy when a global window shows up on a
-big table. Both instances below are registry entries whose oracles pin
-them to the EXACT single-window answer — the scale variants are not
-approximations:
+When a global window shows up on a big table, call
+``projetos_etl_spark.sources.io.distributed_prefix_sum(df, order, value)``
+rather than re-building the recipe: it returns ``df`` plus ``cum``, the
+exact inclusive global running sum of ``value`` over the total order
+``order``, and ``total``. Both instances below are registry entries built
+on it, and their oracles pin them to the EXACT single-window answer — the
+scale variants are not approximations:
 
   deciles      ``win_ntile`` (single-partition window: fine on bounded
                outputs, a single-reducer sort on a 100 TB fact table)
-               vs ``win_ntile_scale``: ``repartitionByRange`` on the
-               unique total sort key -> per-range ``row_number`` over
-               parallel local sorts -> broadcast cumulative partition
-               COUNTS as offsets (a <=#partitions-row aggregate), then
-               ntile's bucket arithmetic as pure integer expressions.
+               vs ``win_ntile_scale``: the prefix sum of 1 over the
+               unique total sort key is the global rank, then ntile's
+               bucket arithmetic as pure integer expressions.
   concurrency  ``win_max_concurrency`` vs ``win_max_concurrency_scale``:
-               the same split applied to a running SUM (+1/-1 session
-               deltas) — prefix sums compose across ranges because + is
-               associative, so per-partition local running sums plus
-               broadcast per-partition TOTALS give the global level.
+               the prefix sum of the +1/-1 session deltas is the live
+               concurrency level.
 
-The general shape: (1) one range shuffle on a total ordering key that is
-UNIQUE (boundaries then affect placement, never rank); (2) the window
-runs per-range-partition, in parallel; (3) the only single-partition
-work left is over per-partition aggregates — #partitions rows, constant
-metadata at any input scale.
+What the primitive does: (1) one range shuffle on the ordering key,
+materialized before anything fans out from it; (2) the running sum runs
+per range partition, in parallel; (3) the only single-partition work
+left is over per-partition totals — #partitions rows, constant metadata
+at any input scale. The ordering key must be UNIQUE when row identity
+matters (ranks, sweeps): tied rows get consecutive ``cum`` values.
 
 Run it:
 

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from projetos_etl_spark.functions.finite import finite, sql_finite, sql_finite_pred
 from projetos_etl_spark.registry._core import TS_FMT_DUCK, TS_FMT_SPARK, Registry, rows_df
-from projetos_etl_spark.sources.io import load_table
+from projetos_etl_spark.sources.io import distributed_prefix_sum, load_table
 
 #: Hard cap on the hourly spine a single series may densify to (ten
 #: years). The spine operators generate min(h)..max(h) PER USER, so ONE
@@ -1200,10 +1200,9 @@ def feat_quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-frequency bucketing (decile discretization) of a numeric
     feature — the QuantileDiscretizer shape, built scale-first.
 
-    Cut points are EXACT order statistics computed by the
-    distributed-rank recipe (the ``win_ntile_scale`` twin):
-    ``repartitionByRange`` on the feature + per-range-partition
-    ``row_number`` + broadcast cumulative offsets give every row its
+    Cut points are EXACT order statistics: ``distributed_prefix_sum``
+    of 1 over the feature (one range shuffle, parallel local sorts,
+    broadcast per-range offsets) gives every row its
     global rank in parallel, and only the <=18 rows bracketing the 9
     quantile positions are collected. The driver then interpolates with
     the EXACT expression Spark's ``percentile`` evaluator uses —
@@ -1219,47 +1218,14 @@ def feat_quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding keeps the strict ``>`` comparison engine-stable."""
     import math
 
-    from projetos_etl_spark.sources.io import checkpoint_partitioned
-
     li = load_table(spark, sf_dir, "lineitem").select("l_extendedprice")
     nn = li.filter(F.col("l_extendedprice").isNotNull())
-    # MATERIALIZED before fan-out: the offsets subtree and the ranked
-    # subtree below both read `ranged`, and two INDEPENDENT executions
-    # of a repartitionByRange re-sample range bounds with different
-    # seeds — the pid->offset map would then describe a different
-    # partitioning than the ranked rows (reproduced under
-    # spark.sql.exchange.reuse=false: silently wrong cut points).
-    # Exchange reuse happens to deduplicate the subtrees under default
-    # config, but partition consistency must be a GUARANTEE, not an
-    # optimizer side effect; the keyless layout-keeping checkpoint
-    # freezes both the physical partitions and the pid column.
-    ranged = checkpoint_partitioned(
-        nn.repartitionByRange(32, F.col("l_extendedprice")).withColumn(
-            "pid", F.spark_partition_id()
-        )
-    )
-    counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    off_w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid",
-        F.coalesce(F.sum("cnt").over(off_w), F.lit(0)).alias("offset"),
-        F.sum("cnt")
-        .over(
-            Window.orderBy("pid").rangeBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("n"),
-    )
-    local_w = Window.partitionBy("pid").orderBy("l_extendedprice")
-    ranked = (
-        ranged.withColumn("local_rn", F.row_number().over(local_w))
-        .join(F.broadcast(offsets), "pid")
-        .select(
-            "l_extendedprice",
-            (F.col("offset") + F.col("local_rn") - 1).alias("gidx"),
-            "n",
-        )
+    # Ordered by price alone: ties are harmless, only the VALUE at each
+    # rank is read and tied rows carry the same value.
+    ranked = distributed_prefix_sum(nn, [F.col("l_extendedprice")], F.lit(1)).select(
+        "l_extendedprice",
+        (F.col("cum") - 1).alias("gidx"),
+        F.col("total").alias("n"),
     )
     hit = None
     for p in _BUCKET_PS:

@@ -11,13 +11,13 @@ full global sort (the difference between seconds and hours at 100 TB).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from projetos_etl_spark.functions.finite import finite, sql_finite
 from projetos_etl_spark.operators.sessionize import sessionize
 from projetos_etl_spark.registry._core import TS_FMT_DUCK, TS_FMT_SPARK, Registry
-from projetos_etl_spark.sources.io import load_table
+from projetos_etl_spark.sources.io import distributed_prefix_sum, load_table
 
 REG = Registry()
 
@@ -213,6 +213,21 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def ntile_of_rank(k: int) -> Column:
+    """SQL ``ntile(k)`` of the 1-based global rank ``cum`` among
+    ``total`` rows (``distributed_prefix_sum`` of 1): base = total div k
+    rows per bucket, the first total % k buckets take base+1.
+    All-integer arithmetic (`div`, never a double division that could
+    truncate wrong near 2^53 at scale); greatest() guards the
+    unreachable base=0 branch under ANSI."""
+    return F.expr(
+        f"CASE WHEN cum <= (total % {k}) * (total div {k} + 1)"
+        f" THEN (cum - 1) div (total div {k} + 1) + 1"
+        f" ELSE (total % {k}) + (cum - 1 - (total % {k}) * (total div {k} + 1))"
+        f"      div greatest(total div {k}, 1) + 1 END"
+    ).cast("int")
+
+
 @REG.add(
     "win_ntile_scale",
     # Same assignments as the exact variant, so the oracle IS the exact
@@ -228,69 +243,19 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_ntile_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB-safe twin of ``win_ntile``: EXACT global decile
     assignment with no single-partition window over the input. The
-    classic distributed-rank recipe — ``repartitionByRange`` on the
-    total sort key (one range shuffle; the sampled boundaries affect
-    only which range a row lands in, never its rank, because the key is
-    unique), per-range-partition ``row_number`` (parallel local sorts),
-    plus broadcast cumulative partition offsets (a ≤#partitions-row
-    aggregate), gives every row its exact global rank; SQL ntile's
-    bucket arithmetic (first n%k buckets take one extra row) is then a
-    pure integer expression. Scale knob: the range-partition count (32
-    here ~ local cores; thousands on a cluster) bounds both sort width
-    and window parallelism. The exact-variant oracle pins that the
+    global rank is ``distributed_prefix_sum`` of 1 over the unique total
+    sort key (one range shuffle, parallel local sorts, broadcast
+    per-range offsets); SQL ntile's bucket arithmetic (first n%k buckets
+    take one extra row) is then a pure integer expression. The sort key
+    is ``asc_nulls_last``: unpriced orders rank last, matching DuckDB's
+    default and the exact twin. The exact-variant oracle pins that the
     assignments are identical, not merely approximate."""
-    from projetos_etl_spark.sources.io import checkpoint_partitioned
-
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    # asc_nulls_last in BOTH the range partitioner and the local sort
-    # (they must agree or a row's global rank is wrong): unpriced
-    # orders rank last, matching DuckDB's default and the exact twin.
-    # MATERIALIZED before fan-out (r14): the counts subtree and the
-    # ranked subtree both read `ranged`, and two independent executions
-    # of a repartitionByRange re-sample bounds with different seeds —
-    # the pid->offset map must describe the SAME physical partitioning
-    # the ranked rows carry. Default-config exchange reuse happened to
-    # guarantee that here for seven rounds (the sampler key is unique,
-    # so even a re-sample only moves rows, never ranks — but the
-    # pid<->offset pairing itself is the invariant at stake); the
-    # keyless layout-keeping checkpoint makes it structural.
-    ranged = checkpoint_partitioned(
-        orders.repartitionByRange(
-            32, F.col("o_totalprice").asc_nulls_last(), F.col("o_orderkey")
-        ).withColumn("pid", F.spark_partition_id())
-    )
-    counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    # Cumulative offsets over <=32 rows: the single-partition window here
-    # runs on the COUNTS, not the data — constant-size driver-side state.
-    off_w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid",
-        F.coalesce(F.sum("cnt").over(off_w), F.lit(0)).alias("offset"),
-        F.sum("cnt").over(
-            Window.orderBy("pid").rangeBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("n"),
-    )
-    local_w = Window.partitionBy("pid").orderBy(
-        F.col("o_totalprice").asc_nulls_last(), "o_orderkey"
-    )
-    ranked = (
-        ranged.withColumn("local_rn", F.row_number().over(local_w))
-        .join(F.broadcast(offsets), "pid")
-        .withColumn("rank", F.col("offset") + F.col("local_rn"))
-    )
-    # SQL ntile(k): base = n div k rows per bucket, the first extra =
-    # n % k buckets take base+1. All-integer arithmetic (`div`, never a
-    # double division that could truncate wrong near 2^53 at scale);
-    # greatest() guards the unreachable base=0 branch under ANSI.
-    decile = F.expr(
-        "CASE WHEN rank <= (n % 10) * (n div 10 + 1)"
-        " THEN (rank - 1) div (n div 10 + 1) + 1"
-        " ELSE (n % 10) + (rank - 1 - (n % 10) * (n div 10 + 1))"
-        "      div greatest(n div 10, 1) + 1 END"
-    )
-    return ranked.select("o_orderkey", decile.cast("int").alias("decile"))
+    return distributed_prefix_sum(
+        orders,
+        [F.col("o_totalprice").asc_nulls_last(), F.col("o_orderkey")],
+        F.lit(1),
+    ).select("o_orderkey", ntile_of_rank(10).alias("decile"))
 
 
 @REG.add(
@@ -1107,20 +1072,14 @@ def win_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_max_concurrency_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB-safe twin of ``win_max_concurrency``: the SAME peak /
     first-peak answer (identical oracle pins it bit-for-bit) with NO
-    un-partitioned window over the delta stream. Prefix sums compose
-    across ranges because + is associative, so the global running level
-    splits into ``repartitionByRange`` on the total order
+    un-partitioned window over the delta stream. The running level is
+    ``distributed_prefix_sum`` of the deltas over the total order
     (at_ts, delta, user_id) — unique by construction: a user's sessions
-    are disjoint, so no two deltas share all three — per-partition
-    local running sums (parallel sorts), plus broadcast per-partition
-    TOTALS accumulated into exclusive offsets (a ≤#partitions-row
-    aggregate; with ``win_ntile_scale`` this is the second instance of
-    the distributed-rank/scan recipe, over sum instead of count). The
-    only single-partition work is the ≤32-row offsets window and the
-    final 1-row argmax — constant-size metadata at any input scale.
-    Scale knob: the range-partition count bounds sort width; the
+    are disjoint, so no two deltas share all three. The only
+    single-partition work is the per-range offsets window and the final
+    1-row argmax — constant-size metadata at any input scale. The
     event→span rollup before the sweep keeps the stream at 2 rows per
-    session."""
+    session, so materializing it is cheap at any scale."""
     ev = load_table(spark, sf_dir, "events")
     sess = sessionize(ev, "user_id", "ts", CONC_GAP_SECONDS)
     spans = sess.groupBy("user_id", "session_id").agg(
@@ -1131,28 +1090,14 @@ def win_max_concurrency_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         spans.select(F.col("e").alias("at_ts"), F.lit(-1).alias("delta"), "user_id")
     )
-    # Eager checkpoint: totals/offsets and the level branch BOTH consume
-    # the ranged stream; materializing it once makes every branch see
-    # the SAME pid assignment by construction (not via exchange reuse —
-    # two independently-planned range exchanges may sample different
-    # boundaries), and computes the event->span rollup once instead of
-    # four times. Unlike win_ntile_scale's full-table input, this set is
-    # 2 rows per SESSION — small enough that materialization is cheap at
-    # any scale (at 100 TB it is the span-reduced stream, not the data).
-    ranged = (
-        deltas.repartitionByRange(32, "at_ts", "delta", "user_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    totals = ranged.groupBy("pid").agg(F.sum("delta").alias("tot"))
-    off_w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "pid", F.coalesce(F.sum("tot").over(off_w), F.lit(0)).alias("offset")
-    )
-    local_w = Window.partitionBy("pid").orderBy("at_ts", "delta", "user_id")
-    level = (
-        ranged.withColumn("run", F.sum("delta").over(local_w))
-        .join(F.broadcast(offsets), "pid")
-        .select("at_ts", (F.col("offset") + F.col("run")).alias("concurrent"))
-    )
+    # Materialized under the caller's AQE first: the primitive builds its
+    # input inside a non-adaptive checkpoint, where the sessionize and
+    # rollup shuffles would run uncoalesced at the session's raw
+    # shuffle-partition count (200 in a stock session: 2x slower at
+    # sf0.1 on local[4]).
+    level = distributed_prefix_sum(
+        deltas.localCheckpoint(eager=True),
+        [F.col("at_ts"), F.col("delta"), F.col("user_id")],
+        F.col("delta"),
+    ).select("at_ts", F.col("cum").alias("concurrent"))
     return _peak_argmax(level)

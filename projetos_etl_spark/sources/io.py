@@ -13,8 +13,9 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -251,6 +252,23 @@ def _field_bytes(dt: T.DataType) -> int:
     return 8
 
 
+#: Serializes checkpoint_partitioned's flip-and-restore of the
+#: session-global AQE flag: two overlapping calls would otherwise each
+#: read the other's "false" as the value to restore.
+_AQE_LOCK = threading.Lock()
+
+
+def _checkpoint_aqe_off(df: DataFrame) -> DataFrame:
+    conf = df.sparkSession.conf
+    with _AQE_LOCK:
+        old = conf.get("spark.sql.adaptive.enabled", "true")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return df.localCheckpoint(eager=True)
+        finally:
+            conf.set("spark.sql.adaptive.enabled", old)
+
+
 def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) -> DataFrame:
     """Eager localCheckpoint that PRESERVES hash partitioning on
     ``key_cols`` (optionally also the within-partition sort order).
@@ -266,6 +284,11 @@ def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) ->
     the final shuffle non-adaptively keeps the layout; consumers still
     run with whatever session config the caller has.
 
+    The AQE flag is session-global, so the flip is serialized by a
+    module lock and restored before returning; this assumes ONE driver
+    thread issues queries on the session — a query another thread runs
+    while a checkpoint is being built would plan without AQE.
+
     Partition count is SIZE-DERIVED, never a constant (guide §2): the
     input is materialized once (plain eager checkpoint — also the only
     full computation of ``df``), its byte size estimated from the
@@ -279,20 +302,13 @@ def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) ->
     whatever layout ``df``'s plan already has (e.g. the join-key
     partitioning a preceding co-partitioned join established) — the
     AQE-off build is still what keeps that layout on the checkpoint."""
-    spark = df.sparkSession
-    conf = spark.conf
-    old = conf.get("spark.sql.adaptive.enabled", "true")
     if not key_cols:
         if sort:  # sortWithinPartitions needs columns; keyless has none
             raise ValueError(
                 "checkpoint_partitioned(sort=True) requires key_cols — "
                 "the keyless form only preserves the existing layout"
             )
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.localCheckpoint(eager=True)
-        finally:
-            conf.set("spark.sql.adaptive.enabled", old)
+        return _checkpoint_aqe_off(df)
     tmp = df.localCheckpoint(eager=True)
     row_bytes = 16 + sum(_field_bytes(f.dataType) for f in tmp.schema.fields)
     n_rows = tmp.count()  # cheap: counts the materialized blocks
@@ -300,17 +316,64 @@ def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) ->
         1,
         min(
             -(-n_rows * row_bytes // CKPT_MIN_PARTITION_BYTES),
-            2 * spark.sparkContext.defaultParallelism,
+            2 * df.sparkSession.sparkContext.defaultParallelism,
         ),
     )
     out = tmp.repartition(int(n), *[F.col(c) for c in key_cols])
     if sort:
         out = out.sortWithinPartitions(*key_cols)
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old)
+    return _checkpoint_aqe_off(out)
+
+
+def distributed_prefix_sum(df: DataFrame, order: list[Column], value: Column) -> DataFrame:
+    """``df`` plus ``cum``, the EXACT inclusive global running sum of
+    ``value`` (a non-null numeric Column) over the total order ``order``,
+    and ``total``, its sum over all rows. ``value=F.lit(1)`` makes
+    ``cum`` the 1-based global rank. ``order`` is a list of Columns
+    (direction and null placement included); the one list drives both
+    the range partitioner and the local sort. It must be UNIQUE when row
+    identity matters (ranks, sweeps): tied rows get consecutive ``cum``
+    values in an arbitrary order.
+
+    Prefix sums compose across ranges because + is associative: one
+    range shuffle (``defaultParallelism`` ranges), a running sum per
+    range, plus broadcast offsets from the per-range totals — the only
+    single-partition work, one row per range. The ranged table is
+    MATERIALIZED before those two branches fan out: a range shuffle
+    re-samples its bounds on every execution, and the pid->offset map
+    must describe the partitioning the rows actually carry. That keyless
+    ``checkpoint_partitioned`` runs ``df``'s plan with AQE off, so
+    materialize an input with shuffles of its own first. ``df`` must not
+    carry ``cum``, ``total`` or the ``_``-prefixed temporaries (``_pid``
+    keys the local window)."""
+    ranged = checkpoint_partitioned(
+        df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, *order)
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_v", value)
+    )
+    part = ranged.groupBy("_pid").agg(F.sum("_v").alias("_part"))
+    by_pid = Window.orderBy("_pid")
+    offsets = part.select(
+        "_pid",
+        (
+            F.sum("_part").over(
+                by_pid.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            - F.col("_part")
+        ).alias("_offset"),
+        F.sum("_part")
+        .over(by_pid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias("total"),
+    )
+    run = Window.partitionBy("_pid").orderBy(*order).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return (
+        ranged.withColumn("_run", F.sum("_v").over(run))
+        .join(F.broadcast(offsets), "_pid")
+        .withColumn("cum", F.col("_offset") + F.col("_run"))
+        .drop("_pid", "_v", "_run", "_offset")
+    )
 
 
 def retention_sweep(spark: SparkSession, base: str, ts_col: str, cutoff: str) -> None:

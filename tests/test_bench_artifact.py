@@ -147,3 +147,25 @@ def test_regression_flag_has_a_noise_floor():
     assert _regression_flag(2.2 / 1.0, 1.0, 2.2)
     # and the old threshold's green region stays green
     assert not _regression_flag(1.2, 5.0, 6.0)
+
+
+def test_delta_compares_only_same_sf_and_core_count(monkeypatch):
+    # The committed BENCH_r*.json were taken on 32 cores (and 8 for the
+    # _c8 scaling artifacts). A 4-core run compared against them would
+    # flag phantom regressions, so it must get no baseline at all.
+    import bench
+
+    with open(os.path.join(os.path.dirname(SPOOL), "BENCH_r14.json")) as f:
+        base = json.load(f)["parsed"]["queries_min"]
+    slow = {n: 3 * t for n, t in base.items()}
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert bench._delta_vs_previous(slow, slow) is None
+
+    # The same timings do flag against a like baseline.
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    delta = bench._delta_vs_previous(slow, slow)
+    assert delta["vs"] == "BENCH_r14.json" and delta["regressions"]
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    assert bench._delta_vs_previous(slow, slow)["vs"] == "BENCH_r14_c8.json"

@@ -72,6 +72,19 @@ def test_rows_unchanged_and_aqe_restored(spark, edges):
     assert ep.agg(F.sum("src"), F.sum("dst")).first() == edges.agg(
         F.sum("src"), F.sum("dst")
     ).first()
+    # Two overlapping calls from two threads, the later one slower: it
+    # finishes last, so without the module lock it would restore the
+    # "false" it read while the first call held AQE off.
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(2) as pool:
+        first = pool.submit(checkpoint_partitioned, edges.limit(1000))
+        time.sleep(0.05)
+        second = pool.submit(checkpoint_partitioned, edges)
+        assert first.result().count() == 1000
+        assert second.result().count() == edges.count()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == before
 
 
 def test_lpa_packed_argmax_matches_struct_argmax(spark):

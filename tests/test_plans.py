@@ -508,26 +508,42 @@ def test_pca_scoring_is_codegen_only(spark, queries):
     assert "Exchange hashpartitioning" not in plan
 
 
+#: A window PARTITIONED by distributed_prefix_sum's range-partition id
+#: (the spec leads with its partition key; an offsets window that only
+#: ORDERS by the id renders as "_pid#N ASC").
+_PID_PARTITIONED_WINDOW = re.compile(r"windowspecdefinition\(_pid#\d+, ")
+
+
 def test_ntile_scale_no_single_partition_over_input(spark, queries):
-    """win_ntile_scale's whole point: the data path must stay range+hash
-    partitioned; the ONLY SinglePartition exchange allowed is the one
-    over the <=32-row partition-counts aggregate feeding the broadcast
-    offsets. The exact variant's global-window shape (Window directly
-    over a SinglePartition exchange of the scan) must not reappear."""
+    """win_ntile_scale's contract at 100 TB: the input is range-shuffled
+    ONCE, inside the checkpoint build, and both the totals and the ranked
+    branch read that one table (an independently re-sampled second range
+    exchange would mis-pair pids and offsets). The only SinglePartition
+    exchange is over the one-row-per-range totals under the broadcast,
+    and no window orders the un-partitioned input (the exact variant)."""
     from projetos_etl_spark.plans import explain_str
 
     df = queries["win_ntile_scale"](spark, SF)
+    df.collect()
     plan = explain_str(df)
-    assert "rangepartitioning" in plan, "distributed rank lost its range shuffle"
-    # The offsets subtree (counts -> cumulative sum) is the only place a
-    # SinglePartition exchange may appear, and it sits under a
-    # BroadcastExchange — never on the row-level data path.
+    assert "isFinalPlan=true" in plan and "Scan parquet" not in plan
+    # the range shuffle ran in the checkpoint job: both leaves carry its
+    # partitioning, read one RDD, and no Exchange here range-partitions
+    assert not re.search(r"Arguments: rangepartitioning", plan)
+    scans = re.findall(
+        r"Scan ExistingRDD.*\nOutput.*\nArguments: .*?(\w+RDD\[\d+\]).*"
+        r"rangepartitioning",
+        plan,
+    )
+    assert len(scans) == 2 and len(set(scans)) == 1, scans
     data_path = plan.split("BroadcastExchange")[0]
     assert "SinglePartition" not in data_path, (
         "a SinglePartition exchange appeared on the data path - the "
         "scale-safe ntile degenerated into the exact variant's plan"
     )
     assert "BroadcastHashJoin" in plan  # offsets re-join is broadcast
+    assert _PID_PARTITIONED_WINDOW.search(plan)
+    assert "windowspecdefinition(o_totalprice" not in plan
 
 
 def test_max_concurrency_scale_no_global_window_over_stream(spark, queries):
@@ -540,54 +556,15 @@ def test_max_concurrency_scale_no_global_window_over_stream(spark, queries):
     from projetos_etl_spark.plans import explain_str
 
     df = queries["win_max_concurrency_scale"](spark, SF)
+    df.collect()
     plan = explain_str(df)
-    # the local prefix-sum window is partitioned by pid
-    assert "windowspecdefinition(pid" in plan, "pid-partitioned run window lost"
+    assert _PID_PARTITIONED_WINDOW.search(plan), "pid-partitioned run window lost"
     # no window spec orders the full delta stream globally
     assert "windowspecdefinition(at_ts" not in plan, (
         "an un-partitioned window over the delta stream reappeared - "
         "the scale twin degenerated into the exact variant's plan"
     )
     assert "BroadcastHashJoin" in plan  # offsets re-join is broadcast
-
-
-def test_ntile_scale_range_shuffle_reused_no_global_window(spark, queries):
-    """win_ntile_scale's contract at 100 TB: the input is range-shuffled
-    ONCE (the counts branch re-reads that materialized exchange — a
-    second, independently-sampled range exchange could assign different
-    pids to the two branches and corrupt every offset), and no window
-    runs over the un-partitioned input (the global-ntile shape this twin
-    exists to avoid). Executed-plan assertions, since AQE finalizes the
-    reuse at runtime."""
-    from projetos_etl_spark.plans.inspect import explain_str
-
-    df = queries["win_ntile_scale"](spark, SF)
-    df.collect()
-    plan = explain_str(df)
-    assert "isFinalPlan=true" in plan
-    final_tree = plan.split("== Initial Plan ==")[0]
-    assert "ReusedExchange" in final_tree  # counts re-read the ONE range shuffle
-    # data-path window is keyed on the range-partition id (the node
-    # details cover final-plan nodes; the spec string leads with its
-    # partition key)...
-    assert "windowspecdefinition(pid" in plan
-    # ...and the exact variant's global shape (window ordered straight on
-    # the sort column, no partition key) must not appear anywhere.
-    assert "windowspecdefinition(o_totalprice" not in plan
-
-
-def test_max_concurrency_scale_no_global_window(spark, queries):
-    """win_max_concurrency_scale's running level must come from
-    per-range-partition prefix sums (windows keyed on pid), never a
-    window over the un-partitioned delta stream — the documented
-    single-partition sweep its exact twin pays."""
-    from projetos_etl_spark.plans.inspect import explain_str
-
-    df = queries["win_max_concurrency_scale"](spark, SF)
-    df.collect()
-    plan = explain_str(df)
-    assert "windowspecdefinition(pid" in plan
-    assert "windowspecdefinition(at_ts" not in plan
 
 
 def test_ewma_anomaly_no_window_no_python(spark, queries):

@@ -678,54 +678,62 @@ def test_kcore_peeling_reaches_true_fixpoint(spark, raw_edges, k):
 @PROP
 @given(st.lists(st.integers(0, 50), min_size=1, max_size=40))
 def test_ntile_scale_arithmetic_matches_builtin(spark, values):
-    """The distributed-rank decile recipe (win_ntile_scale shape:
-    repartitionByRange + per-partition row_number + broadcast cumulative
-    offsets + integer bucket arithmetic) must assign the IDENTICAL
-    bucket as built-in ntile(10) for every n — including n < 10, heavy
-    ties on the value (the id tiebreak makes the total key unique), and
-    sizes that leave range partitions empty."""
+    """win_ntile_scale's decile path (distributed_prefix_sum of 1 +
+    ntile_of_rank) must assign the IDENTICAL bucket as built-in
+    ntile(10) for every n — including n < 10, heavy ties on the value
+    (the id tiebreak makes the total key unique), and more ranges than
+    rows (the session's 8), which leaves range partitions empty."""
     from pyspark.sql import Window
+
+    from projetos_etl_spark.registry.windows import ntile_of_rank
+    from projetos_etl_spark.sources.io import distributed_prefix_sum
 
     df = spark.createDataFrame(
         [(i, float(v)) for i, v in enumerate(values)], "id long, v double"
     )
-    ranged = df.repartitionByRange(4, "v", "id").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    off_w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid",
-        F.coalesce(F.sum("cnt").over(off_w), F.lit(0)).alias("offset"),
-        F.sum("cnt")
-        .over(
-            Window.orderBy("pid").rangeBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("n"),
-    )
-    local_w = Window.partitionBy("pid").orderBy("v", "id")
-    ranked = (
-        ranged.withColumn("local_rn", F.row_number().over(local_w))
-        .join(F.broadcast(offsets), "pid")
-        .withColumn("rank", F.col("offset") + F.col("local_rn"))
-    )
-    decile = F.expr(
-        "CASE WHEN rank <= (n % 10) * (n div 10 + 1)"
-        " THEN (rank - 1) div (n div 10 + 1) + 1"
-        " ELSE (n % 10) + (rank - 1 - (n % 10) * (n div 10 + 1))"
-        "      div greatest(n div 10, 1) + 1 END"
-    )
+    ranked = distributed_prefix_sum(df, [F.col("v"), F.col("id")], F.lit(1))
     got = {
         r.id: r.decile
-        for r in ranked.select("id", decile.cast("int").alias("decile")).collect()
+        for r in ranked.select("id", ntile_of_rank(10).alias("decile")).collect()
     }
     want = {
         r.id: r.decile
         for r in df.select(
             "id", F.ntile(10).over(Window.orderBy("v", "id")).alias("decile")
         ).collect()
+    }
+    assert got == want
+
+
+@PROP
+@given(
+    st.lists(
+        st.tuples(st.one_of(st.none(), st.integers(0, 5)), st.integers(-50, 50)),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_distributed_prefix_sum_matches_builtin_running_sum(spark, rows):
+    """distributed_prefix_sum(value=...) equals the built-in running sum
+    row for row: ties and NULLs on the leading key (one asc_nulls_last
+    Column drives partitioner and local sort), signed values."""
+    from pyspark.sql import Window
+
+    from projetos_etl_spark.sources.io import distributed_prefix_sum
+
+    df = spark.createDataFrame(
+        [(i, k, v) for i, (k, v) in enumerate(rows)], "id long, k int, v long"
+    )
+    order = [F.col("k").asc_nulls_last(), F.col("id")]
+    got = {
+        r.id: (r.cum, r.total)
+        for r in distributed_prefix_sum(df, order, F.col("v")).collect()
+    }
+    run = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
+    total = sum(v for _, v in rows)
+    want = {
+        r.id: (r.cum, total)
+        for r in df.select("id", F.sum("v").over(run).alias("cum")).collect()
     }
     assert got == want
 

@@ -33,7 +33,7 @@ SHOWCASE = [
     ("agg_corr_matrix", "All 15 raw moments come from a single partial+final HashAggregate pair over one scan; the 6-pair matrix is driver-assembled from that one row (no repeated scans, no union of per-pair subplans)."),
     ("corpus_kneser_ney_bigram", "ONE bigram-count shuffle feeds four aggregates (context totals, follower counts, predecessor counts, type total) via a checkpointed Scan ExistingRDD leaf; all re-joins are BroadcastHashJoin; top-k is TakeOrderedAndProject."),
     ("win_max_concurrency", "The +1/-1 sweep's global Window sorts the SESSION-SPAN deltas (2 rows per session), not events: the event->span reduction is a partial+final HashAggregate below the union, and the peak pick is a 1-row broadcast scalar join."),
-    ("win_ntile_scale", "Exact global deciles with NO single-partition window over the input: Exchange rangepartitioning(32) then per-range row_number (Window partitioned by pid); the only Exchange SinglePartition sits over the <=32-row partition-counts aggregate; offsets re-join is BroadcastHashJoin; the bucket arithmetic is integer div/% codegen."),
+    ("win_ntile_scale", "Exact global deciles with NO single-partition window over the input: distributed_prefix_sum's rangepartitioning (defaultParallelism ranges) runs inside the eager checkpoint build, so both branches read the one Scan ExistingRDD; per-range running count (Window partitioned by _pid); the only Exchange SinglePartition sits over the one-row-per-range totals aggregate; offsets re-join is BroadcastHashJoin; the bucket arithmetic is integer div/% codegen."),
 ]
 
 #: Showcase entries whose interesting plan only appears under confs the

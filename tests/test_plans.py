@@ -567,6 +567,20 @@ def test_max_concurrency_scale_no_global_window_over_stream(spark, queries):
     assert "BroadcastHashJoin" in plan  # offsets re-join is broadcast
 
 
+def test_max_concurrency_scale_no_global_window(spark, queries):
+    """win_max_concurrency_scale's running level must come from
+    per-range-partition prefix sums (windows keyed on _pid), never a
+    window over the un-partitioned delta stream — the documented
+    single-partition sweep its exact twin pays."""
+    from projetos_etl_spark.plans.inspect import explain_str
+
+    df = queries["win_max_concurrency_scale"](spark, SF)
+    df.collect()
+    plan = explain_str(df)
+    assert _PID_PARTITIONED_WINDOW.search(plan)
+    assert "windowspecdefinition(at_ts" not in plan
+
+
 def test_ewma_anomaly_no_window_no_python(spark, queries):
     """ts_ewma_anomaly computes the per-key EWMA as a JVM array fold
     (F.aggregate over collected spans) — the plan must contain neither a

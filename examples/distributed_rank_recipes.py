@@ -42,7 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from projetos_etl_spark.plans.inspect import explain_str
+from projetos_etl_spark.plans import plan_nodes
 from projetos_etl_spark.registry.windows import (
     win_max_concurrency,
     win_max_concurrency_scale,
@@ -73,10 +73,13 @@ def main(sf_dir: str) -> None:
     # table in one partition (SinglePartition exchange feeding the
     # window); the recipe's input-sized exchange is rangepartitioning,
     # and its only single-partition work is over per-partition counts.
-    naive_plan = explain_str(exact)
-    scale_plan = explain_str(scale)
-    print(f"naive plan has SinglePartition exchange: {'SinglePartition' in naive_plan}")
-    print(f"scale plan range-partitions the input:   {'rangepartitioning' in scale_plan}")
+    naive_single = any(
+        n.name == "ShuffleExchange" and n.partitioning == "SinglePartition"
+        for n in plan_nodes(exact)
+    )
+    scale_ranged = any(n.partitioning == "RangePartitioning" for n in plan_nodes(scale))
+    print(f"naive plan has SinglePartition exchange: {naive_single}")
+    print(f"scale plan range-partitions the input:   {scale_ranged}")
 
     # 2. Peak concurrency: the same split over a running sum.
     peak_exact = win_max_concurrency(spark, sf_dir).collect()[0]

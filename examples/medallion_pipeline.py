@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from projetos_etl_spark.medallion import gold_profit_mart, last_write_seconds, run_pipeline
+from projetos_etl_spark.plans import partition_filters
 from projetos_etl_spark.registry.medallion import _synth_financial_raw
 from projetos_etl_spark.session import get_spark
 from projetos_etl_spark.sources.io import load_table
@@ -51,11 +52,7 @@ def main(sf_dir: str) -> None:
     # Partition pruning in action: a single-year gold scan reads ONE
     # directory (PartitionFilters in the plan).
     one_year = silver.filter(F.col("year") == 1996)
-    plan = one_year._sc._jvm.PythonSQLUtils.explainString(
-        one_year._jdf.queryExecution(), "simple"
-    )
-    pf = plan.split("PartitionFilters:", 1)
-    pruned = len(pf) == 2 and "1996" in pf[1].split("]", 1)[0]
+    pruned = any("1996" in f for f in partition_filters(one_year))
     print(f"single-year scan partition-pruned: {pruned}")
 
     # Gold mart: ROLLUP subtotals with exact-cents accumulation.

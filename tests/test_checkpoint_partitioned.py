@@ -9,24 +9,16 @@ data, not a constant, and (c) change nothing about the rows.
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pytest
 from pyspark.sql import functions as F
 
+from projetos_etl_spark.plans import op_counts
 from projetos_etl_spark.sources.io import checkpoint_partitioned
 
 
 def _n_exchanges(df) -> int:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return sum(
-        1
-        for ln in buf.getvalue().splitlines()
-        if ln.strip().startswith("(") and "Exchange" in ln and "Reused" not in ln
-    )
+    counts = op_counts(df)
+    return counts["ShuffleExchange"] + counts["BroadcastExchange"]
 
 
 @pytest.fixture(scope="module")

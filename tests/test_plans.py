@@ -12,6 +12,9 @@ from pyspark.sql import functions as F
 from projetos_etl_spark.plans import (
     codegen_stage_count,
     has_operator,
+    op_counts,
+    partition_filters,
+    plan_nodes,
     pushed_filters,
     read_schemas,
 )
@@ -23,6 +26,34 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def queries():
     return all_queries()
+
+
+def _has_below(df, upper: str, lower: str) -> bool:
+    """Some ``upper`` operator has a ``lower`` operator beneath it."""
+    return any(
+        d.name == lower
+        for n in plan_nodes(df)
+        if n.name == upper
+        for d in n.walk()
+        if d is not n
+    )
+
+
+def _hash_exchanges(df) -> int:
+    return sum(
+        n.name == "ShuffleExchange" and n.partitioning == "HashPartitioning"
+        for n in plan_nodes(df)
+    )
+
+
+def _window_leads(nodes) -> list[str]:
+    """The leading key of every Window spec: its first partition key,
+    else (an un-partitioned window) its first ordering."""
+    return [
+        (n.exprs("partitionSpec") + n.exprs("orderSpec"))[0]
+        for n in nodes
+        if n.name == "Window"
+    ]
 
 
 def test_q1_filter_pushed_and_columns_pruned(spark, queries):
@@ -68,14 +99,10 @@ def test_partition_pruned_readback(spark, tmp_path):
     out = str(tmp_path / "layer")
     sink_partitioned(orders, out, ["o_orderstatus"])
     scan = spark.read.parquet(out).filter(F.col("o_orderstatus") == "F")
-    from projetos_etl_spark.plans import explain_str
-
-    plan = explain_str(scan)
     # The filter lands on the partition column -> directory pruning
     # (PartitionFilters), NOT a data filter (no PushedFilters needed),
     # and the data columns read exclude the partition column itself.
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "o_orderstatus" in m.group(1)
+    assert any("o_orderstatus" in f for f in partition_filters(scan))
     assert all("o_orderstatus" not in s for s in read_schemas(scan))
 
 
@@ -84,8 +111,6 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     at write time — the co-located sort-merge join then needs NO Exchange
     (at 100 TB this converts the biggest shuffle in the pipeline into a
     local merge)."""
-    from projetos_etl_spark.plans import explain_str
-
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -107,9 +132,9 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
             spark.table("pes_orders_b"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        plan = explain_str(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan
+        counts = op_counts(joined)
+        assert counts["SortMergeJoin"] == 1
+        assert counts["ShuffleExchange"] == 0, counts
         # And the join result is right.
         assert joined.count() == li.join(
             orders, li.l_orderkey == orders.o_orderkey
@@ -131,9 +156,13 @@ def test_salted_join_spreads_key_and_matches_plain(spark):
     plain = li.join(supp, on="l_suppkey")
     assert salted.count() == plain.count()
     # The physical join key includes the salt column.
-    from projetos_etl_spark.plans import explain_str
-
-    assert "__salt" in explain_str(salted)
+    keys = [
+        k
+        for n in plan_nodes(salted)
+        if n.name in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+        for k in n.exprs("leftKeys")
+    ]
+    assert any("__salt" in k for k in keys), keys
 
 
 def test_aqe_splits_skewed_join(spark):
@@ -142,8 +171,8 @@ def test_aqe_splits_skewed_join(spark):
     actually triggers AQE's skew-join split on this box (thresholds
     lowered to local-scale sizes; 90% of rows on one key, incompressible
     payload so the skewed partition's shuffle BYTES exceed the
-    threshold). The executed plan must carry ``SortMergeJoin(skew=true)``
-    in its final adaptive form. The salted-join fallback for the cases
+    threshold). The final adaptive plan must carry a skew-split
+    ``SortMergeJoin``. The salted-join fallback for the cases
     AQE can't re-plan (aggregations, pre-AQE engines) is covered by
     test_salted_join_spreads_key_and_matches_plain."""
     confs = {
@@ -172,9 +201,9 @@ def test_aqe_splits_skewed_join(spark):
         # separate one), then read the final adaptive plan.
         n = joined._jdf.queryExecution().executedPlan().execute().count()
         assert n == 100_000
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in plan
-        assert re.search(r"SortMergeJoin\(skew=true\)", plan), plan[:2000]
+        assert joined._jdf.queryExecution().executedPlan().isFinalPlan()
+        smjs = [n for n in plan_nodes(joined) if n.name == "SortMergeJoin"]
+        assert any(n.j.isSkewJoin() for n in smjs), smjs
     finally:
         for k, v in prev.items():
             if v is None:
@@ -190,10 +219,8 @@ def test_q1_wholestage_codegen_present(spark, queries):
 
 def test_medallion_conform_is_narrow(spark, queries):
     # The silver transform must be shuffle-free: no Exchange in the plan.
-    df = queries["medallion_silver_conform"](spark, SF)
-    from projetos_etl_spark.plans import explain_str
-
-    assert "Exchange" not in explain_str(df)
+    counts = op_counts(queries["medallion_silver_conform"](spark, SF))
+    assert counts["ShuffleExchange"] == counts["BroadcastExchange"] == 0, counts
 
 
 def test_q9_dims_broadcast_one_fact_shuffle(spark, queries):
@@ -248,14 +275,8 @@ def test_dynamic_partition_pruning(spark, queries, tmp_path):
     joined = fact.join(dim, fact.o_orderstatus == dim.status).groupBy(
         "o_orderpriority"
     ).count()
-    plan = explain_plan(joined)
-    assert "dynamicpruning" in plan.lower(), plan[:2000]
-
-
-def explain_plan(df):
-    from projetos_etl_spark.plans.inspect import explain_str
-
-    return explain_str(df)
+    filters = partition_filters(joined)
+    assert any("dynamicpruning" in f for f in filters), filters
 
 
 def test_q17_q20_dims_broadcast_no_smj(spark, queries):
@@ -281,27 +302,22 @@ def test_resample_pick_is_hash_aggregate(spark, queries):
     """ts_resample_ffill's per-hour pick must plan as a combinable
     hash aggregate (max_by over a struct), NOT a row_number window —
     the window formulation would sort every partition before picking."""
-    from projetos_etl_spark.plans.inspect import explain_str
-
-    plan = explain_str(queries["ts_resample_ffill"](spark, SF))
+    counts = op_counts(queries["ts_resample_ffill"](spark, SF))
     # exactly one Window in the plan: the forward-fill itself
-    assert plan.count("Window") - plan.count("WindowGroupLimit") <= 2
-    assert "max_by" in plan or "HashAggregate" in plan
+    assert counts["Window"] <= 1
+    assert counts["HashAggregate"]
 
 
 def test_gap_islands_single_exchange_reused(spark, queries):
     """win_gap_islands' window pass and final aggregate both key on
     user_id — Catalyst must plan ONE shuffle on the user key (plus the
     distinct's), not re-exchange between the window and the groupBy."""
-    from projetos_etl_spark.plans.inspect import explain_str
-
-    plan = explain_str(queries["win_gap_islands"](spark, SF))
+    df = queries["win_gap_islands"](spark, SF)
     # Exchanges: distinct (user_id, h) + window/groupBy key. The groupBy
-    # on (user_id, g) must NOT add a third full-width exchange because
-    # rows are already partitioned by user_id... Spark can't prove g is
-    # user-local, so allow <= 3 but require the window+agg adjacency.
-    assert plan.count("Exchange hashpartitioning") <= 3
-    assert "Window" in plan
+    # on (user_id, g) must NOT add a third: its rows are already
+    # partitioned by user_id, which the (user_id, g) clustering accepts.
+    assert _hash_exchanges(df) == 2
+    assert has_operator(df, "Window")
 
 
 def test_resample_to_mix_thresholds_broadcast(spark, queries):
@@ -318,15 +334,9 @@ def test_decayed_sum_is_single_hash_aggregate(spark, queries):
     """agg_time_decayed_sum must plan as partial+final hash aggregates
     (map-combinable) with the reference timestamp broadcast — no window,
     no sort of the fact table."""
-    from projetos_etl_spark.plans.inspect import explain_str
-
-    df = queries["agg_time_decayed_sum"](spark, SF)
-    plan = explain_str(df)
-    assert "HashAggregate" in plan
-    assert "Window" not in plan
-    assert has_operator(df, "BroadcastNestedLoopJoin") or has_operator(
-        df, "BroadcastHashJoin"
-    )
+    counts = op_counts(queries["agg_time_decayed_sum"](spark, SF))
+    assert counts["HashAggregate"] and not counts["Window"]
+    assert counts["BroadcastNestedLoopJoin"] or counts["BroadcastHashJoin"]
 
 
 def test_feat_scale_normalize_broadcasts_stats(spark, queries):
@@ -403,8 +413,8 @@ def test_runtime_bloom_filter_injected(spark, queries):
         for k, v in confs.items():
             spark.conf.set(k, v)
         df = queries["join_bloom_prune"](spark, SF)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "might_contain" in plan, plan[:2000]
+        filters = [n for n in plan_nodes(df) if n.name == "Filter"]
+        assert any("might_contain" in str(n.j.condition()) for n in filters)
         assert df.count() > 0
     finally:
         for k, v in prev.items():
@@ -419,10 +429,7 @@ def test_triangle_count_dims_broadcast(spark, queries):
     must broadcast (no SortMergeJoin for them); the wedge/closing joins
     run on the 25-node oriented edge list and are trivially small."""
     df = queries["graph_triangle_count"](spark, SF)
-    from projetos_etl_spark.plans import explain_str
-
-    plan = explain_str(df)
-    assert "BroadcastHashJoin" in plan
+    assert has_operator(df, "BroadcastHashJoin")
 
 
 def test_weighted_median_preaggregates_before_window(spark, queries):
@@ -431,15 +438,7 @@ def test_weighted_median_preaggregates_before_window(spark, queries):
     rows. A plan whose Window consumes the scan directly would sort the
     full fact table at 100 TB."""
     df = queries["agg_weighted_median"](spark, SF)
-    from projetos_etl_spark.plans import explain_str
-
-    plan = explain_str(df)
-    win = plan.find("Window")
-    agg = plan.rfind("HashAggregate")
-    assert win != -1 and agg != -1
-    # In explain output children print BELOW parents, so the pre-agg
-    # HashAggregate must appear after (deeper than) the Window line.
-    assert agg > win, plan[:3000]
+    assert _has_below(df, "Window", "HashAggregate")
 
 
 def test_weighted_reservoir_plans_take_ordered(spark, queries):
@@ -448,9 +447,7 @@ def test_weighted_reservoir_plans_take_ordered(spark, queries):
     Limit here would total-sort the corpus at 100 TB."""
     df = queries["sample_weighted_reservoir"](spark, SF)
     assert has_operator(df, "TakeOrderedAndProject")
-    from projetos_etl_spark.plans import explain_str
-
-    assert "GlobalLimit" not in explain_str(df)
+    assert not has_operator(df, "GlobalLimit")
 
 
 def test_pareto_window_runs_over_customer_grain(spark, queries):
@@ -458,60 +455,47 @@ def test_pareto_window_runs_over_customer_grain(spark, queries):
     REDUCE (HashAggregate below Window), never raw orders — the
     pre-aggregation is what bounds window state at scale."""
     df = queries["agg_pareto_concentration"](spark, SF)
-    from projetos_etl_spark.plans import explain_str
-
-    plan = explain_str(df)
-    win = plan.find("Window")
-    agg = plan.rfind("HashAggregate")
-    assert win != -1 and agg != -1
-    assert agg > win, plan[:3000]
+    assert _has_below(df, "Window", "HashAggregate")
 
 
 def test_corr_matrix_single_scan_single_aggregate(spark, queries):
     """All 15 moments must come from ONE reduce over ONE scan; the 6-pair
     matrix is driver-assembled (a union of per-pair selects measured 12
     FileScans with zero reuse)."""
-    from projetos_etl_spark.plans import explain_str
-
     df = queries["agg_corr_matrix"](spark, SF)
-    plan = explain_str(df)
     # The returned frame is built from the collected stats row: the
-    # lineitem scan must NOT appear in it at all.
-    assert "lineitem" not in plan.lower()
+    # lineitem scan (or any other) must NOT appear in it at all.
+    assert not has_operator(df, "FileSourceScan")
 
 
 def test_bipartite_projection_edges_materialized_once(spark, queries):
     """The orders x lineitem edge build must be a checkpointed leaf, so
     the degree filter and both self-join sides read it instead of
     re-planning the join (static plan had 8 FileScans, 0 reuse)."""
-    from projetos_etl_spark.plans import explain_str
-
-    df = queries["graph_bipartite_projection"](spark, SF)
-    plan = explain_str(df)
-    assert plan.count("FileScan") + plan.count("Scan parquet") == 0, (
+    counts = op_counts(queries["graph_bipartite_projection"](spark, SF))
+    assert counts["FileSourceScan"] == 0, (
         "edge set should be a checkpointed ExistingRDD leaf; fact scans "
         "reappeared in the projection plan"
     )
-    assert "ExistingRDD" in plan
+    assert counts["RDDScan"]
 
 
 def test_pca_scoring_is_codegen_only(spark, queries):
     """The per-vector scoring pass must be a pure projection over the
     scan — no Python stage, no shuffle (the Arrow mapInPandas stage
     belongs to the TRAINING pass, which is already collected by entry
-    build time)."""
-    from projetos_etl_spark.plans import explain_str
-
+    build time). Its only exchange is the final orderBy's range
+    shuffle."""
     df = queries["emb_pca_top_component"](spark, SF)
-    plan = explain_str(df)
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "Exchange hashpartitioning" not in plan
+    counts = op_counts(df)
+    assert not counts["ArrowEvalPython"] and not counts["BatchEvalPython"]
+    assert _hash_exchanges(df) == 0
 
 
 #: A window PARTITIONED by distributed_prefix_sum's range-partition id
 #: (the spec leads with its partition key; an offsets window that only
-#: ORDERS by the id renders as "_pid#N ASC").
-_PID_PARTITIONED_WINDOW = re.compile(r"windowspecdefinition\(_pid#\d+, ")
+#: ORDERS by the id leads with "_pid#N ASC ...").
+_PID_PARTITION_KEY = re.compile(r"_pid#\d+")
 
 
 def test_ntile_scale_no_single_partition_over_input(spark, queries):
@@ -521,29 +505,33 @@ def test_ntile_scale_no_single_partition_over_input(spark, queries):
     exchange would mis-pair pids and offsets). The only SinglePartition
     exchange is over the one-row-per-range totals under the broadcast,
     and no window orders the un-partitioned input (the exact variant)."""
-    from projetos_etl_spark.plans import explain_str
-
     df = queries["win_ntile_scale"](spark, SF)
     df.collect()
-    plan = explain_str(df)
-    assert "isFinalPlan=true" in plan and "Scan parquet" not in plan
+    assert df._jdf.queryExecution().executedPlan().isFinalPlan()
+    nodes = plan_nodes(df)
+    assert not any(n.name == "FileSourceScan" for n in nodes)
     # the range shuffle ran in the checkpoint job: both leaves carry its
     # partitioning, read one RDD, and no Exchange here range-partitions
-    assert not re.search(r"Arguments: rangepartitioning", plan)
-    scans = re.findall(
-        r"Scan ExistingRDD.*\nOutput.*\nArguments: .*?(\w+RDD\[\d+\]).*"
-        r"rangepartitioning",
-        plan,
-    )
-    assert len(scans) == 2 and len(set(scans)) == 1, scans
-    data_path = plan.split("BroadcastExchange")[0]
-    assert "SinglePartition" not in data_path, (
+    exchanges = [n for n in nodes if n.name == "ShuffleExchange"]
+    assert not any(e.partitioning == "RangePartitioning" for e in exchanges)
+    leaves = [n for n in nodes if n.name == "RDDScan"]
+    assert len(leaves) == 2, leaves
+    assert all(n.partitioning == "RangePartitioning" for n in leaves)
+    assert len({n.j.rdd().id() for n in leaves}) == 1
+    broadcast = {
+        id(d) for n in nodes if n.name == "BroadcastExchange" for d in n.walk()
+    }
+    assert not any(
+        e.partitioning == "SinglePartition" and id(e) not in broadcast
+        for e in exchanges
+    ), (
         "a SinglePartition exchange appeared on the data path - the "
         "scale-safe ntile degenerated into the exact variant's plan"
     )
-    assert "BroadcastHashJoin" in plan  # offsets re-join is broadcast
-    assert _PID_PARTITIONED_WINDOW.search(plan)
-    assert "windowspecdefinition(o_totalprice" not in plan
+    assert any(n.name == "BroadcastHashJoin" for n in nodes)  # offsets re-join
+    leads = _window_leads(nodes)
+    assert any(_PID_PARTITION_KEY.fullmatch(k) for k in leads), leads
+    assert not any(k.startswith("o_totalprice#") for k in leads), leads
 
 
 def test_max_concurrency_scale_no_global_window_over_stream(spark, queries):
@@ -553,18 +541,19 @@ def test_max_concurrency_scale_no_global_window_over_stream(spark, queries):
     un-partitioned window ordered by at_ts. (The range exchange itself
     sits inside the eager checkpoint job, so the returned plan reads the
     materialized stream; the pin is on the window specs.)"""
-    from projetos_etl_spark.plans import explain_str
-
     df = queries["win_max_concurrency_scale"](spark, SF)
     df.collect()
-    plan = explain_str(df)
-    assert _PID_PARTITIONED_WINDOW.search(plan), "pid-partitioned run window lost"
+    nodes = plan_nodes(df)
+    leads = _window_leads(nodes)
+    assert any(_PID_PARTITION_KEY.fullmatch(k) for k in leads), (
+        "pid-partitioned run window lost"
+    )
     # no window spec orders the full delta stream globally
-    assert "windowspecdefinition(at_ts" not in plan, (
+    assert not any(k.startswith("at_ts#") for k in leads), (
         "an un-partitioned window over the delta stream reappeared - "
         "the scale twin degenerated into the exact variant's plan"
     )
-    assert "BroadcastHashJoin" in plan  # offsets re-join is broadcast
+    assert any(n.name == "BroadcastHashJoin" for n in nodes)  # offsets re-join
 
 
 def test_max_concurrency_scale_no_global_window(spark, queries):
@@ -572,13 +561,11 @@ def test_max_concurrency_scale_no_global_window(spark, queries):
     per-range-partition prefix sums (windows keyed on _pid), never a
     window over the un-partitioned delta stream — the documented
     single-partition sweep its exact twin pays."""
-    from projetos_etl_spark.plans.inspect import explain_str
-
     df = queries["win_max_concurrency_scale"](spark, SF)
     df.collect()
-    plan = explain_str(df)
-    assert _PID_PARTITIONED_WINDOW.search(plan)
-    assert "windowspecdefinition(at_ts" not in plan
+    leads = _window_leads(plan_nodes(df))
+    assert any(_PID_PARTITION_KEY.fullmatch(k) for k in leads)
+    assert not any(k.startswith("at_ts#") for k in leads)
 
 
 def test_ewma_anomaly_no_window_no_python(spark, queries):
@@ -586,11 +573,9 @@ def test_ewma_anomaly_no_window_no_python(spark, queries):
     (F.aggregate over collected spans) — the plan must contain neither a
     Window operator nor a Python eval node; either would mean the hot
     path fell off the codegen'd aggregate shape SCALE.md documents."""
-    from projetos_etl_spark.plans.inspect import explain_str
-
-    plan = explain_str(queries["ts_ewma_anomaly"](spark, SF))
-    assert "Window" not in plan
-    assert "EvalPython" not in plan  # Batch/ArrowEvalPython
+    counts = op_counts(queries["ts_ewma_anomaly"](spark, SF))
+    assert not counts["Window"]
+    assert not any(n.endswith("EvalPython") for n in counts)  # Batch/Arrow
 
 
 def test_kneser_ney_joins_are_broadcast(spark, queries):
@@ -611,19 +596,33 @@ def test_kcore_one_edge_join_checkpointed_leaves_no_window(spark, queries):
     FileScan leaf here means the checkpoint was dropped (plan blow-up and
     a re-scan per round at 100 TB); a Window/Python/nested-loop node
     means the peeling fell off the join+aggregate shape PLANS.md pins."""
-    from projetos_etl_spark.plans.inspect import explain_str
-
-    df = queries["graph_kcore_decomposition"](spark, SF)
-    plan = explain_str(df)
-    assert "Scan ExistingRDD" in plan  # checkpointed leaves only
-    assert "Scan parquet" not in plan and "FileScan" not in plan
-    assert "Window" not in plan
-    assert "EvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-    assert has_operator(df, "HashAggregate")  # the degree count
+    counts = op_counts(queries["graph_kcore_decomposition"](spark, SF))
+    assert counts["RDDScan"]  # checkpointed leaves only
+    assert not counts["FileSourceScan"]
+    assert not counts["Window"]
+    assert not any(n.endswith("EvalPython") for n in counts)
+    assert not counts["CartesianProduct"]
+    assert not counts["BroadcastNestedLoopJoin"]
     # Exactly one aggregate pair: the within-subgraph degree sum.
-    assert len(re.findall(r"\(\d+\) HashAggregate", plan)) == 2
+    assert counts["HashAggregate"] == 2
+
+
+def test_lpa_round_hash_aggregates_one_shuffled_hash_join(spark):
+    """graph_label_propagation's per-round plan (the fixpoint loop's hot
+    path): the label join is ONE shuffled-hash join (no sort-merge sort
+    of the edge side), the vote histogram and the packed-long argmax are
+    two partial+final HashAggregate pairs (a max over a struct would
+    fall back to SortAggregate), and nothing sorts. The round is the one
+    tools/gen_plans.py renders as the entry's per-iteration plan."""
+    from tools.gen_plans import ITERATIONS
+
+    counts = op_counts(ITERATIONS["graph_label_propagation"](spark, SF))
+    assert counts["Sort"] == counts["SortAggregate"] == 0, counts
+    assert counts["ShuffledHashJoin"] == 1, counts
+    assert counts["HashAggregate"] == 4, counts
+    # At this fixture the one-partition edge checkpoint is re-shuffled
+    # onto the join's partition count; at sf0.1 the round takes 2.
+    assert counts["ShuffleExchange"] == 3, counts
 
 
 def test_unscored_row_filters_reach_the_scan(spark, queries):

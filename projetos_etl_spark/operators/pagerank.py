@@ -100,6 +100,9 @@ def _pr_step(e: DataFrame, ranks: DataFrame, n: int, damping: float) -> DataFram
     )
     contribs = (
         ranks.filter(F.col("deg") > 0)
+        # The hinted side is the hash-join build side: held in memory
+        # per partition, and Spark cannot spill it. Safe while one
+        # partition of the node-scale rank table fits in executor memory.
         .hint("shuffle_hash")
         .join(e, F.col("id") == e.src)
         .select(

@@ -26,7 +26,7 @@ from projetos_etl_spark.operators.minhash import (
 )
 from projetos_etl_spark.operators.simhash import NUM_BITS, simhash_signatures
 from projetos_etl_spark.registry._core import Registry
-from projetos_etl_spark.sources.io import checkpoint_partitioned, load_table
+from projetos_etl_spark.sources.io import aqe_off, checkpoint_partitioned, load_table
 
 REG = Registry()
 
@@ -1529,45 +1529,93 @@ LPA_SUPP_BASE = 1_000_000
 #: LONG exactly like struct(cnt, -label) — max count first, ties to the
 #: SMALLEST label — while staying hash-aggregable (max over struct falls
 #: back to SortAggregate: sort per partition + no mutable agg buffer).
-#: Safe while 0 <= label < 2^32 and cnt < 2^31: labels are TPC-H customer
-#: keys and {LPA_SUPP_BASE}+suppkey (< 2^32 at any published SF), counts
-#: are bounded by the node count.
+#: Exact only while 0 <= label < 2^32 (and cnt < 2^31, which a node's
+#: degree bounds): a negative key carries into the count, a key >= 2^32
+#: borrows from it. ``_lpa_packable`` checks the label domain once per
+#: run; outside it the rounds use the exact struct argmax.
 _LPA_PACK = 4294967296  # 2^32
 
 
-def _lpa_step(und: DataFrame, labels: DataFrame) -> DataFrame:
+def _lpa_packable(und: DataFrame) -> bool:
+    """True iff every label of an LPA run over ``und`` fits the packed
+    argmax: labels are node ids, i.e. ``src`` values. One min/max
+    aggregate over the checkpointed edges, planned without AQE so it is
+    one job rather than one per stage; an empty graph is packable."""
+    with aqe_off(und.sparkSession):
+        lo, hi = und.agg(F.min("src"), F.max("src")).first()
+    return lo is None or (lo >= 0 and hi < _LPA_PACK)
+
+
+def _lpa_step(
+    und: DataFrame, labels: DataFrame | None, n: int, packed: bool
+) -> DataFrame:
     """One synchronous LPA round: each node adopts its neighbors'
     most-frequent label (count DESC, label ASC).
 
+    ``labels=None`` is the first round, where every node's label is its
+    own id: the votes are the edges themselves, with no labels table and
+    no join. ``und`` holds every edge in both directions, so "``src``
+    hears ``dst``" is the same vote multiset as "``dst`` hears
+    ``src``", and it already sits in the ``src`` partitions: the
+    round's repartition matches the existing layout and plans no
+    exchange at all.
+
     Shuffle shape (guide §2.4 — share one exchange between operations
     keyed the same way): ``und`` arrives hash-partitioned on ``src``
-    (checkpoint_partitioned, built once before the loop), so the label
-    join only ever shuffles the node-scale ``labels`` side — the
-    shuffled-hash hint skips the edge-side sort a sort-merge join would
-    add per round. The vote stream then takes ONE explicit edge-scale
-    exchange on ``nid``; hashpartitioning(nid) satisfies the clustering
-    of BOTH downstream aggregates (keys (nid,label) then (nid)), so the
-    histogram and the argmax run exchange-free in the same stage, and
-    the packed-long argmax keeps them HashAggregates."""
-    votes = und.join(
-        labels.hint("shuffle_hash"), und.src == labels.id
-    ).select(F.col("dst").alias("nid"), "label")
-    packed = F.max(
-        F.col("cnt") * F.lit(_LPA_PACK) + (F.lit(_LPA_PACK - 1) - F.col("label"))
-    )
-    return (
-        votes.repartition(F.col("nid"))
+    into ``n`` partitions (checkpoint_partitioned, built once before the
+    loop). The vote stream takes the round's ONE exchange, onto ``nid``
+    with the same ``n``: hashpartitioning(nid, n) satisfies the
+    clustering of BOTH aggregates (keys (nid,label) then (nid)), and the
+    result, checkpointed keyless (AQE off), keeps it as
+    hashpartitioning(id, n) — the same layout as ``und``, so the next
+    round's label join needs no exchange on either side. The
+    shuffled-hash hint keeps that join from sorting the edge side.
+    ``packed`` (see ``_lpa_packable``) picks the packed-long argmax,
+    which keeps both aggregates HashAggregates, over the exact struct
+    argmax."""
+    if labels is None:
+        votes = und.select(F.col("src").alias("nid"), F.col("dst").alias("label"))
+    else:
+        # ``labels`` is the hash-join build side: held in memory per
+        # partition, and Spark cannot spill it. Safe while one partition
+        # of the node-scale label table fits in executor memory.
+        votes = und.join(
+            labels.hint("shuffle_hash"), und.src == labels.id
+        ).select(F.col("dst").alias("nid"), "label")
+    by_node = (
+        votes.repartition(n, F.col("nid"))
         .groupBy("nid", "label")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("nid")
-        .agg(packed.alias("p"))
-        .select(
-            F.col("nid").alias("id"),
-            (F.lit(_LPA_PACK - 1) - F.pmod(F.col("p"), F.lit(_LPA_PACK))).alias(
-                "label"
-            ),
-        )
     )
+    if packed:
+        best = by_node.agg(
+            F.max(
+                F.col("cnt") * F.lit(_LPA_PACK)
+                + (F.lit(_LPA_PACK - 1) - F.col("label"))
+            ).alias("p")
+        )
+        label = F.lit(_LPA_PACK - 1) - F.pmod(F.col("p"), F.lit(_LPA_PACK))
+    else:
+        # ~label = -label-1 reverses the order of EVERY long (no overflow)
+        best = by_node.agg(
+            F.max(F.struct("cnt", F.bitwise_not("label").alias("nl"))).alias("p")
+        )
+        label = F.bitwise_not(F.col("p.nl"))
+    return best.select(F.col("nid").alias("id"), label.alias("label"))
+
+
+def _lpa_labels(und: DataFrame) -> DataFrame:
+    """(id, label) after ``LPA_ITERS`` rounds over the src-partitioned
+    edge checkpoint ``und``; each round is materialized by a keyless
+    checkpoint, which truncates lineage and keeps the co-partitioned
+    layout (see ``_lpa_step``)."""
+    n = und.rdd.getNumPartitions()
+    packed = _lpa_packable(und)
+    labels = None
+    for _ in range(LPA_ITERS):
+        labels = checkpoint_partitioned(_lpa_step(und, labels, n, packed))
+    return labels
 
 
 @REG.add(
@@ -1617,11 +1665,14 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup web domains or co-citation sets before per-community dedup).
     Deterministic by construction: the update argmax breaks count ties
     on the SMALLEST label, all-integer state, fixed {LPA_ITERS}
-    synchronous rounds. Per round: ONE edge-join shuffle + ONE
-    two-level aggregate; lineage truncated per round (localCheckpoint)
-    so the plan stays iteration-invariant — at 100 TB the edge table is
-    hash-partitioned on src once and every round reuses that
-    partitioning."""
+    synchronous rounds. The edge table is hash-partitioned on src ONCE,
+    and every round's labels are kept hash-partitioned on id into the
+    same partitions, so a round is ONE exchange (the vote shuffle onto
+    the receiving node) plus one two-level aggregate: the label join
+    reads both sides in place. The first round (every label is its
+    node's id) votes straight off the edges, with no join and no
+    exchange. Lineage is truncated per round, so the plan stays
+    iteration-invariant."""
     # NULL keys are not vertices (family-seven convention, SCALE.md).
     o = (
         load_table(spark, sf_dir, "orders")
@@ -1650,13 +1701,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "src",
     )
-    labels = und.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
-    for _ in range(LPA_ITERS):
-        labels = _lpa_step(und, labels).localCheckpoint(eager=True)
     w = Window.partitionBy("label")
-    return labels.select(
+    return _lpa_labels(und).select(
         F.col("id").alias("node_id"),
         "label",
         F.count(F.lit(1)).over(w).alias("community_size"),
@@ -1765,7 +1811,10 @@ def _kcore_degrees(und: DataFrame, alive: DataFrame) -> DataFrame:
     hash-partitioned on ``dst`` (checkpoint_partitioned, built once), so
     the join only shuffles the node-scale alive side — hinted
     shuffled-hash so the edge side is never sorted either; the single
-    remaining edge-scale exchange is the mergeable groupBy(src)."""
+    remaining edge-scale exchange is the mergeable groupBy(src). The
+    hinted alive side is the hash-join build side, which Spark holds in
+    memory per partition and cannot spill: safe while one partition of
+    the node table fits in executor memory."""
     return (
         und.join(
             alive.select(F.col("id").alias("dst"), F.col("alive").alias("da")).hint(

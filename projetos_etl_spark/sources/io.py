@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import os
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -252,21 +254,35 @@ def _field_bytes(dt: T.DataType) -> int:
     return 8
 
 
-#: Serializes checkpoint_partitioned's flip-and-restore of the
-#: session-global AQE flag: two overlapping calls would otherwise each
-#: read the other's "false" as the value to restore.
+#: Serializes aqe_off's flip-and-restore of the session-global AQE
+#: flag: two overlapping calls would otherwise each read the other's
+#: "false" as the value to restore.
 _AQE_LOCK = threading.Lock()
 
 
-def _checkpoint_aqe_off(df: DataFrame) -> DataFrame:
-    conf = df.sparkSession.conf
+@contextmanager
+def aqe_off(spark: SparkSession) -> Iterator[None]:
+    """Plan and run the block's queries without AQE, then restore the
+    caller's setting. A non-adaptive plan keeps the output partitioning
+    a checkpoint records (see ``checkpoint_partitioned``), and an action
+    runs as ONE job where AQE submits each shuffle stage as a job of its
+    own. The flag is session-global, so the flip is serialized by a
+    module lock; this assumes ONE driver thread issues queries on the
+    session — a query another thread runs inside the block would plan
+    without AQE."""
+    conf = spark.conf
     with _AQE_LOCK:
         old = conf.get("spark.sql.adaptive.enabled", "true")
         conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            return df.localCheckpoint(eager=True)
+            yield
         finally:
             conf.set("spark.sql.adaptive.enabled", old)
+
+
+def _checkpoint_aqe_off(df: DataFrame) -> DataFrame:
+    with aqe_off(df.sparkSession):
+        return df.localCheckpoint(eager=True)
 
 
 def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) -> DataFrame:
@@ -284,10 +300,9 @@ def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) ->
     the final shuffle non-adaptively keeps the layout; consumers still
     run with whatever session config the caller has.
 
-    The AQE flag is session-global, so the flip is serialized by a
-    module lock and restored before returning; this assumes ONE driver
-    thread issues queries on the session — a query another thread runs
-    while a checkpoint is being built would plan without AQE.
+    The AQE flag is session-global: the flip is ``aqe_off``'s, serialized
+    and restored before returning, under its one-driver-thread
+    assumption.
 
     Partition count is SIZE-DERIVED, never a constant (guide §2): the
     input is materialized once (plain eager checkpoint — also the only
@@ -296,7 +311,13 @@ def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) ->
     sized to ``CKPT_MIN_PARTITION_BYTES``-or-larger partitions, capped
     at 2x ``defaultParallelism`` so a genuinely large table still lands
     at cluster width (a few hundred MB per partition at 100 TB inputs)
-    rather than at a tiny-partition floor.
+    rather than at a tiny-partition floor. The count is floored at 2,
+    not 1: ``repartition(1, key)`` plans as ``SinglePartition``, which
+    the planner does not treat as a reusable hash layout, so every join
+    against a one-partition checkpoint would re-shuffle it to
+    ``spark.sql.shuffle.partitions``. Two hash partitions are kept (a
+    2-partition checkpoint joined in a 4-shuffle-partition session is
+    not re-shuffled); the second partition costs one near-empty task.
 
     With NO ``key_cols`` this adds no exchange at all: it preserves
     whatever layout ``df``'s plan already has (e.g. the join-key
@@ -313,7 +334,7 @@ def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) ->
     row_bytes = 16 + sum(_field_bytes(f.dataType) for f in tmp.schema.fields)
     n_rows = tmp.count()  # cheap: counts the materialized blocks
     n = max(
-        1,
+        2,
         min(
             -(-n_rows * row_bytes // CKPT_MIN_PARTITION_BYTES),
             2 * df.sparkSession.sparkContext.defaultParallelism,

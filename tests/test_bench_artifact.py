@@ -150,9 +150,10 @@ def test_regression_flag_has_a_noise_floor():
 
 
 def test_delta_compares_only_same_sf_and_core_count(monkeypatch):
-    # The committed BENCH_r*.json were taken on 32 cores (and 8 for the
-    # _c8 scaling artifacts). A 4-core run compared against them would
-    # flag phantom regressions, so it must get no baseline at all.
+    # The committed BENCH_r*.json were taken on 32 cores up to r14, 8
+    # for the _c8 scaling artifacts, and 4 from r15. A run compared
+    # against another core count would flag phantom regressions, so
+    # with no like baseline it must get no baseline at all.
     import bench
 
     with open(os.path.join(os.path.dirname(SPOOL), "BENCH_r14.json")) as f:
@@ -160,7 +161,7 @@ def test_delta_compares_only_same_sf_and_core_count(monkeypatch):
     slow = {n: 3 * t for n, t in base.items()}
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
 
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert bench._delta_vs_previous(slow, slow) is None
 
     # The same timings do flag against a like baseline.
@@ -169,3 +170,5 @@ def test_delta_compares_only_same_sf_and_core_count(monkeypatch):
     assert delta["vs"] == "BENCH_r14.json" and delta["regressions"]
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
     assert bench._delta_vs_previous(slow, slow)["vs"] == "BENCH_r14_c8.json"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert bench._delta_vs_previous(slow, slow)["vs"] == "BENCH_r15.json"

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from projetos_etl_spark.plans import op_counts
+from projetos_etl_spark.plans import op_counts, plan_nodes
 from projetos_etl_spark.sources.io import checkpoint_partitioned
 
 
@@ -23,9 +23,8 @@ def _n_exchanges(df) -> int:
 
 @pytest.fixture(scope="module")
 def edges(spark):
-    # Big enough that the size heuristic picks MULTIPLE partitions
-    # (~24 MB estimated at 24 B/row): a single-partition layout is
-    # where the planner may still legitimately re-shuffle.
+    # Big enough that the size heuristic picks more than its floor of 2
+    # partitions (~24 MB estimated at 24 B/row).
     return spark.range(1_000_000).select(
         (F.col("id") % 1000).alias("src"), (F.col("id") % 777).alias("dst")
     )
@@ -41,6 +40,24 @@ def test_preserves_hash_partitioning_for_joins(spark, edges):
     assert _n_exchanges(ep.groupBy("src").count()) == 0
 
 
+def test_small_checkpoint_keeps_hash_layout_for_joins(spark):
+    # Sized at one partition, the keyed checkpoint is floored at 2: one
+    # partition would plan as SinglePartition, which the planner does
+    # not reuse as a join's hash layout, and re-shuffle this side.
+    small = checkpoint_partitioned(
+        spark.range(100).select(F.col("id").alias("src"), (F.col("id") % 7).alias("dst")),
+        "src",
+    )
+    labels = spark.range(1000).select("id", F.col("id").alias("label"))
+    nodes = plan_nodes(small.join(labels.hint("shuffle_hash"), small.src == labels.id))
+    (leaf,) = [n for n in nodes if n.name == "RDDScan"]
+    assert leaf.partitioning == "HashPartitioning"
+    # Only the unpartitioned labels side shuffles.
+    (exchange,) = [n for n in nodes if n.name.endswith("Exchange")]
+    assert exchange.name == "ShuffleExchange"
+    assert leaf not in exchange.walk()
+
+
 def test_keyless_call_keeps_existing_layout(spark, edges):
     ep = checkpoint_partitioned(edges, "src")
     again = checkpoint_partitioned(ep.filter(F.col("dst") >= 0))
@@ -50,10 +67,10 @@ def test_keyless_call_keeps_existing_layout(spark, edges):
 
 def test_partition_count_is_size_derived(spark, edges):
     small = checkpoint_partitioned(spark.range(100).select(F.col("id").alias("src")), "src")
-    assert small.rdd.getNumPartitions() == 1
+    assert small.rdd.getNumPartitions() == 2  # the floor, not 1
     cap = 2 * spark.sparkContext.defaultParallelism
     big = checkpoint_partitioned(edges, "src")
-    assert 1 <= big.rdd.getNumPartitions() <= cap
+    assert 2 < big.rdd.getNumPartitions() <= cap
 
 
 def test_rows_unchanged_and_aqe_restored(spark, edges):
@@ -79,34 +96,64 @@ def test_rows_unchanged_and_aqe_restored(spark, edges):
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
 
 
-def test_lpa_packed_argmax_matches_struct_argmax(spark):
-    # The packed-long histogram argmax (registry/dedup._lpa_step) must
-    # pick exactly what max(struct(cnt, -label)) picked: max count,
-    # ties to the SMALLEST label.
-    from projetos_etl_spark.registry.dedup import _LPA_PACK
+def _edge_checkpoint(spark, pairs):
+    """Both directions of each (a, b) pair, checkpointed on src as
+    graph_label_propagation builds its edge table."""
+    und = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
+    return checkpoint_partitioned(spark.createDataFrame(und, "src long, dst long"), "src")
 
-    rows = [(1, 10, 3), (1, 11, 3), (2, 5, 1), (2, 7, 1), (2, 7, 2)]
-    hist = spark.createDataFrame(rows, "nid int, label long, cnt long")
-    packed = (
-        hist.groupBy("nid")
-        .agg(
-            F.max(
-                F.col("cnt") * F.lit(_LPA_PACK)
-                + (F.lit(_LPA_PACK - 1) - F.col("label"))
-            ).alias("p")
-        )
-        .select(
-            "nid",
-            (F.lit(_LPA_PACK - 1) - F.pmod(F.col("p"), F.lit(_LPA_PACK))).alias(
-                "label"
-            ),
-        )
-    )
-    struct_max = (
-        hist.groupBy("nid")
-        .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("t"))
-        .select("nid", (-F.col("t.neg")).alias("label"))
-    )
-    assert sorted(map(tuple, packed.collect())) == sorted(
-        map(tuple, struct_max.collect())
-    )
+
+def _reference_lpa(pairs, rounds):
+    """Synchronous LPA in plain Python: each node takes its neighbors'
+    most frequent label, ties to the smallest."""
+    from collections import Counter
+
+    nbrs: dict[int, list[int]] = {}
+    for a, b in pairs:
+        nbrs.setdefault(a, []).append(b)
+        nbrs.setdefault(b, []).append(a)
+    label = {v: v for v in nbrs}
+    for _ in range(rounds):
+        label = {
+            v: min(Counter(label[u] for u in us).items(), key=lambda kv: (-kv[1], kv[0]))[0]
+            for v, us in nbrs.items()
+        }
+    return sorted(label.items())
+
+
+def test_lpa_packed_argmax_matches_struct_argmax(spark):
+    # The packed-long histogram argmax must pick exactly what the exact
+    # struct argmax picks: max count, ties to the SMALLEST label. Node 1
+    # hears 10 and 11 once each (a tie), node 2 hears 5 once and 7 twice
+    # (7 is a repeated edge, which the histogram counts twice).
+    from projetos_etl_spark.registry.dedup import _lpa_packable, _lpa_step
+
+    und = _edge_checkpoint(spark, [(10, 1), (11, 1), (5, 2), (7, 2), (7, 2)])
+    assert _lpa_packable(und)
+    n = und.rdd.getNumPartitions()
+    # The first round votes off the src-partitioned edges: no exchange.
+    assert _n_exchanges(_lpa_step(und, None, n, True)) == 0
+    first = checkpoint_partitioned(_lpa_step(und, None, n, True))
+    for labels in (None, first):
+        packed = _lpa_step(und, labels, n, True).collect()
+        exact = _lpa_step(und, labels, n, False).collect()
+        assert sorted(map(tuple, packed)) == sorted(map(tuple, exact))
+    picked = dict(map(tuple, first.collect()))
+    assert (picked[1], picked[2]) == (10, 7)
+
+
+def test_lpa_outside_packed_domain_is_exact(spark):
+    # Labels < 0 or >= 2^32 break the packed argmax (a negative label
+    # carries into the count, a large one borrows from it); the domain
+    # guard must route such a graph to the exact argmax.
+    from projetos_etl_spark.registry.dedup import LPA_ITERS, _lpa_labels, _lpa_packable
+
+    big = 1 << 32
+    pairs = [
+        (-3, big + 5), (-3, big + 6), (-3, 7), (-2, big + 5), (-2, 7),
+        (big + 9, 7), (big + 9, -2), (-1, big + 6), (-1, 8), (0, -3),
+    ]
+    und = _edge_checkpoint(spark, pairs)
+    assert not _lpa_packable(und)
+    got = sorted(map(tuple, _lpa_labels(und).collect()))
+    assert got == _reference_lpa(pairs, LPA_ITERS)

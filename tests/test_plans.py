@@ -612,16 +612,32 @@ def test_lpa_round_hash_aggregates_one_shuffled_hash_join(spark):
     path): the label join is ONE shuffled-hash join (no sort-merge sort
     of the edge side), the vote histogram and the packed-long argmax are
     two partial+final HashAggregate pairs (a max over a struct would
-    fall back to SortAggregate), and nothing sorts. The round is the one
-    tools/gen_plans.py renders as the entry's per-iteration plan."""
+    fall back to SortAggregate), nothing sorts, and the vote shuffle is
+    the round's only exchange. The round is the one tools/gen_plans.py
+    renders as the entry's per-iteration plan: a joined round, labels
+    from one prior checkpointed round."""
     from tools.gen_plans import ITERATIONS
 
     counts = op_counts(ITERATIONS["graph_label_propagation"](spark, SF))
     assert counts["Sort"] == counts["SortAggregate"] == 0, counts
     assert counts["ShuffledHashJoin"] == 1, counts
     assert counts["HashAggregate"] == 4, counts
-    # At this fixture the one-partition edge checkpoint is re-shuffled
-    # onto the join's partition count; at sf0.1 the round takes 2.
+    # The vote shuffle only: the edges and the labels both arrive
+    # hash-partitioned on the join key into the same partitions.
+    assert counts["ShuffleExchange"] == 1, counts
+
+
+@pytest.mark.parametrize("name", ["graph_kcore_decomposition", "graph_pagerank"])
+def test_graph_round_keeps_edge_checkpoint_layout(spark, name):
+    """The k-core and PageRank rounds (tools/gen_plans.py ITERATIONS)
+    join the edge checkpoint on its partition key, so it is never
+    re-shuffled: three exchanges at any scale, all of them node-scale
+    or the one aggregate shuffle (k-core: the alive side twice and the
+    degree groupBy; PageRank: the rank side, the inflow groupBy and the
+    dangling-mass total)."""
+    from tools.gen_plans import ITERATIONS
+
+    counts = op_counts(ITERATIONS[name](spark, SF))
     assert counts["ShuffleExchange"] == 3, counts
 
 

@@ -56,12 +56,14 @@ def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lpa_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from projetos_etl_spark.registry.dedup import _lpa_step
+    """A joined LPA round: labels from one prior checkpointed round, as
+    every round after the first reads them."""
+    from projetos_etl_spark.registry.dedup import _lpa_packable, _lpa_step
 
     und = checkpoint_partitioned(_undirected(spark, sf_dir), "src")
-    ids = und.select(F.col("src").alias("id")).distinct()
-    labels = ids.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
-    return _lpa_step(und, labels)
+    n, packed = und.rdd.getNumPartitions(), _lpa_packable(und)
+    labels = checkpoint_partitioned(_lpa_step(und, None, n, packed))
+    return _lpa_step(und, labels, n, packed)
 
 
 def _kcore_round(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,7 +147,8 @@ SHOWCASE = [
     ("corpus_kneser_ney_bigram", "ONE bigram-count shuffle feeds four aggregates (context totals, follower counts, predecessor counts, type total) via a checkpointed Scan ExistingRDD leaf; all re-joins are BroadcastHashJoin; top-k is TakeOrderedAndProject."),
     ("win_max_concurrency", "The +1/-1 sweep's global Window sorts the SESSION-SPAN deltas (2 rows per session), not events: the event->span reduction is a partial+final HashAggregate below the union, and the peak pick is ONE 1-row aggregate (max over a (level, -ts) struct), not a second pass over the level stream."),
     ("win_ntile_scale", "Exact global deciles with NO single-partition window over the input: distributed_prefix_sum's rangepartitioning (defaultParallelism ranges) runs inside the eager checkpoint build, so both branches read the one Scan ExistingRDD; per-range running count (Window partitioned by _pid); the only Exchange SinglePartition sits over the one-row-per-range totals aggregate; offsets re-join is BroadcastHashJoin; the bucket arithmetic is integer div/% codegen."),
-    ("graph_kcore_decomposition", "Each peeling round is ONE edge join + ONE partial+final HashAggregate pair over checkpointed Scan ExistingRDD leaves. The node-scale alive flags are the ShuffledHashJoin build side against the edge list checkpointed on dst by checkpoint_partitioned (at sf0.001 its single partition is re-shuffled onto the join's partition count), the aggregate counts each node's alive neighbors, and a node-scale left join folds the degrees back onto the alive table. localCheckpoint truncates lineage every round, so round 6 plans the same size as round 1 (no re-derivation of the orders x lineitem build). No Window, no Python eval, no cartesian/nested-loop join; the entry's own plan is the final degree pass in the same shape plus the rangepartitioning orderBy that pins row order. Pinned by tests/test_plans.py::test_kcore_one_edge_join_checkpointed_leaves_no_window."),
+    ("graph_label_propagation", "Each round after the first is ONE exchange, the vote shuffle. That exchange is hashpartitioning(nid, n): the edge checkpoint (hash on src) and the previous round's labels (hash on id, same n, kept by the keyless AQE-off checkpoint) feed the ShuffledHashJoin with no exchange on either side, and the vote histogram and the packed-long argmax are two partial+final HashAggregate pairs in the vote shuffle's stage. No Sort, no SortAggregate. The first round votes straight off the src-partitioned edges (no labels table, no join, no exchange). The entry's own plan is the community-size Window and the orderBy over the last round's checkpoint. Pinned by tests/test_plans.py::test_lpa_round_hash_aggregates_one_shuffled_hash_join."),
+    ("graph_kcore_decomposition", "Each peeling round is ONE edge join + ONE partial+final HashAggregate pair over checkpointed Scan ExistingRDD leaves. The node-scale alive flags are the ShuffledHashJoin build side against the edge list checkpointed on dst by checkpoint_partitioned (read in place: its hash layout is never re-shuffled), the aggregate counts each node's alive neighbors, and a node-scale left join folds the degrees back onto the alive table. localCheckpoint truncates lineage every round, so round 6 plans the same size as round 1 (no re-derivation of the orders x lineitem build). No Window, no Python eval, no cartesian/nested-loop join; the entry's own plan is the final degree pass in the same shape plus the rangepartitioning orderBy that pins row order. Pinned by tests/test_plans.py::test_kcore_one_edge_join_checkpointed_leaves_no_window."),
 ]
 
 #: Showcase entries whose interesting plan only appears under confs the

@@ -29,7 +29,7 @@ from projetos_etl_spark.medallion import gold_profit_mart, last_write_seconds, r
 from projetos_etl_spark.plans import partition_filters
 from projetos_etl_spark.registry.medallion import _synth_financial_raw
 from projetos_etl_spark.session import get_spark
-from projetos_etl_spark.sources.io import load_table
+from projetos_etl_spark.sources.io import load_table, spread
 
 
 def main(sf_dir: str) -> None:
@@ -37,8 +37,9 @@ def main(sf_dir: str) -> None:
 
     # Raw layer: the reference's 16-column financial sample shape,
     # synthesized deterministically from lineitem (same generator the
-    # correctness entries use).
-    raw = _synth_financial_raw(load_table(spark, sf_dir, "lineitem"))
+    # correctness entries use). The narrow scan is widened before the
+    # projection; run_pipeline writes its input as planned.
+    raw = _synth_financial_raw(spread(load_table(spark, sf_dir, "lineitem")))
     base = tempfile.mkdtemp(prefix="medallion_example_")
 
     # bronze write -> silver conform -> partitioned silver write -> re-read.

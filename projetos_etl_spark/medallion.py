@@ -29,10 +29,10 @@ from __future__ import annotations
 
 import contextvars
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from projetos_etl_spark.sources.io import sink_parquet, sink_partitioned, spread
+from projetos_etl_spark.sources.io import sink_parquet, sink_partitioned
 
 #: Reference rename map (``silver:85-104``) with the two typos fixed:
 #: ``Gross Sales -> gross_sales`` (ref: ``gross_sale``) and
@@ -80,13 +80,6 @@ def clean_currency_col(col: F.Column, symbol: str = "R$") -> F.Column:
     cleaned = F.replace(col.cast("string"), F.lit(symbol), F.lit(""))
     cleaned = F.replace(cleaned, F.lit(","), F.lit(""))
     return cleaned.cast("double")
-
-
-def require_nonempty(df: DataFrame) -> DataFrame:
-    """Empty-input guard (ref op #14, ``silver:133-135``)."""
-    if df.isEmpty():
-        raise ValueError("DataFrame is empty — nothing to write to the silver layer")
-    return df
 
 
 def silver_conform(raw: DataFrame, with_ingestion_ts: bool = True) -> DataFrame:
@@ -160,24 +153,32 @@ def run_pipeline(
     pipeline minus Airflow): raw parquet to ``{base_dir}/bronze``, the
     conformed table partitioned by ``partition_cols`` (default: year) to
     ``{base_dir}/silver``. Returns the silver DataFrame re-read from its
-    layer path — the handoff a gold mart consumes (partition-pruned)."""
+    layer path — the handoff a gold mart consumes (partition-pruned).
+
+    Only the layer writes run jobs; nothing is probed on the side:
+
+    - the empty-input guard (ref op #14, ``silver:133-135``) is an
+      ``Observation`` row count riding on the bronze write. An empty
+      ``raw`` raises ``ValueError`` after bronze is written and before
+      anything is written to silver;
+    - both layers are re-read with the schema that was just written
+      (parquet reads every column back nullable, and the partition
+      column lands last, as inference would place it), so no read
+      starts a schema-inference job;
+    - ``raw`` is written as planned. Widening a narrow scan is the
+      caller's job, on the scan before any wide projection (see
+      ``sources.io.spread``): here it would re-plan the whole raw query
+      to read its partition count."""
     import time
 
     t0 = time.perf_counter()
-    # spread(): single-file local fixtures plan 1-3 input splits, which
-    # serializes the write and the regex-heavy conform on one core; on a
-    # real multi-file 100 TB layer the scan is already wide and this is a
-    # no-op (see sources/io.py).
-    sink_parquet(spread(raw), f"{base_dir}/bronze")
+    rows = Observation()
+    sink_parquet(raw.observe(rows, F.count(F.lit(1)).alias("n")), f"{base_dir}/bronze")
     write_secs = time.perf_counter() - t0
-    # No spread() on the read-back (r14): the partitioned sink below
-    # repartitions on (partition_cols, salt) anyway, so widening here
-    # was a SECOND full exchange of the bronze strings for nothing —
-    # the conform expressions run map-side of the sink's own shuffle
-    # (guide §2.4: two operations keyed the same way share one
-    # exchange; here the second keying was round-robin noise).
-    bronze = spark.read.parquet(f"{base_dir}/bronze")
-    silver = require_nonempty(silver_conform(bronze, with_ingestion_ts=False))
+    if rows.get["n"] == 0:
+        raise ValueError("DataFrame is empty — nothing to write to the silver layer")
+    bronze = spark.read.schema(raw.schema).parquet(f"{base_dir}/bronze")
+    silver = silver_conform(bronze, with_ingestion_ts=False)
     t1 = time.perf_counter()
     # file_groups=4: ~4 writers/files per partition value instead of one
     # file per (task x value) — see sink_partitioned; halves the layer
@@ -187,7 +188,7 @@ def run_pipeline(
         silver, f"{base_dir}/silver", partition_cols or ["year"], file_groups=4
     )
     _LAST_WRITE_SECONDS.set(write_secs + (time.perf_counter() - t1))
-    return spark.read.parquet(f"{base_dir}/silver")
+    return spark.read.schema(silver.schema).parquet(f"{base_dir}/silver")
 
 
 def gold_profit_mart(silver: DataFrame) -> DataFrame:

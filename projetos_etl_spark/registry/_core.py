@@ -111,17 +111,19 @@ def rows_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    st = T.StructType.fromDDL(schema)
     if not rows or len(rows) > ROWS_DF_MAX:
         # Self-enforcing contract: above the measured crossover the
         # literal plan's one-off codegen is ~10x WORSE than the Python
         # worker it avoids — fall back instead of trusting every future
-        # caller to re-read this docstring. NOTE the fallback is
-        # type-STRICTER than the literal path: lit(v).cast(type)
-        # coerces (an int into a double field), createDataFrame
-        # verifies and raises — pass values already of the schema's
-        # Python types (every current caller does).
-        return spark.createDataFrame(rows, schema)
-    st = T.StructType.fromDDL(schema)
+        # caller to re-read this docstring. createDataFrame verifies
+        # Python types where lit(v).cast(type) coerces, so numbers are
+        # first converted to their field's type: both paths accept the
+        # same rows (an int in a DOUBLE field, say).
+        return spark.createDataFrame(
+            [tuple(_as_field_type(v, f.dataType) for v, f in zip(row, st.fields)) for row in rows],
+            st,
+        )
     structs = [
         F.struct(
             *[
@@ -132,6 +134,21 @@ def rows_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
         for row in rows
     ]
     return spark.range(1).select(F.inline(F.array(*structs)))
+
+
+def _as_field_type(v, dt):
+    """``v`` converted as ``lit(v).cast(dt)`` converts a number: to float
+    for FLOAT/DOUBLE, truncated to int for the integral types; anything
+    else unchanged."""
+    from pyspark.sql import types as T
+
+    if v is None:
+        return v
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return float(v)
+    if isinstance(dt, T.IntegralType) and isinstance(v, float):
+        return int(v)
+    return v
 
 
 # Engine-neutral timestamp rendering (Spark pattern <-> DuckDB strftime):

@@ -187,10 +187,11 @@ def medallion_gold_profit_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At scale the silver layer is partitioned on the rollup's date axis,
     so the gold scan reads only the partitions it aggregates."""
-    # spread() the NARROW fact scan before the synth projection: widening
-    # parallelism here shuffles 8 numeric columns; after the projection it
-    # would shuffle 16 formatted-string columns (~3x the bytes) for the
-    # same effect. No-op on an already-wide scan.
+    # spread() the NARROW fact scan before the synth projection (the
+    # pipeline writes its input as planned): widening parallelism here
+    # shuffles 8 numeric columns; after the projection it would shuffle
+    # 16 formatted-string columns (~3x the bytes) for the same effect.
+    # No-op on an already-wide scan.
     raw = _synth_financial_raw(spread(load_table(spark, sf_dir, "lineitem")))
     base = scratch_dir("medallion_")
     silver = run_pipeline(spark, raw, base, partition_cols=["year"])

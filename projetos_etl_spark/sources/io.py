@@ -305,12 +305,12 @@ def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) ->
     assumption.
 
     Partition count is SIZE-DERIVED, never a constant (guide §2): the
-    input is materialized once (plain eager checkpoint — also the only
-    full computation of ``df``), its byte size estimated from the
-    materialized row count x schema row width, and the keyed shuffle
-    sized to ``CKPT_MIN_PARTITION_BYTES``-or-larger partitions, capped
-    at 2x ``defaultParallelism`` so a genuinely large table still lands
-    at cluster width (a few hundred MB per partition at 100 TB inputs)
+    input is materialized once (a plain checkpoint, filled by the job
+    that counts it — the only full computation of ``df``), its byte
+    size estimated from that row count x schema row width, and the
+    keyed shuffle sized to ``CKPT_MIN_PARTITION_BYTES``-or-larger
+    partitions, capped at 2x ``defaultParallelism`` so a genuinely large
+    table still lands at cluster width (a few hundred MB per partition at 100 TB inputs)
     rather than at a tiny-partition floor. The count is floored at 2,
     not 1: ``repartition(1, key)`` plans as ``SinglePartition``, which
     the planner does not treat as a reusable hash layout, so every join
@@ -330,9 +330,15 @@ def checkpoint_partitioned(df: DataFrame, *key_cols: str, sort: bool = False) ->
                 "the keyless form only preserves the existing layout"
             )
         return _checkpoint_aqe_off(df)
-    tmp = df.localCheckpoint(eager=True)
+    # Lazy checkpoint, filled by the count: one job computes ``df``,
+    # stores its blocks and counts them. An eager checkpoint would be a
+    # job of its own, and an adaptive count two more over the blocks.
+    # Shuffles inside ``df`` still run adaptively: they execute when the
+    # checkpoint is created.
+    tmp = df.localCheckpoint(eager=False)
     row_bytes = 16 + sum(_field_bytes(f.dataType) for f in tmp.schema.fields)
-    n_rows = tmp.count()  # cheap: counts the materialized blocks
+    with aqe_off(df.sparkSession):
+        n_rows = tmp.count()
     n = max(
         2,
         min(

@@ -151,9 +151,9 @@ def test_regression_flag_has_a_noise_floor():
 
 def test_delta_compares_only_same_sf_and_core_count(monkeypatch):
     # The committed BENCH_r*.json were taken on 32 cores up to r14, 8
-    # for the _c8 scaling artifacts, and 4 from r15. A run compared
-    # against another core count would flag phantom regressions, so
-    # with no like baseline it must get no baseline at all.
+    # for the _c8 scaling artifacts, and 4 from r15 (the newest is r16).
+    # A run compared against another core count would flag phantom
+    # regressions, so with no like baseline it must get no baseline.
     import bench
 
     with open(os.path.join(os.path.dirname(SPOOL), "BENCH_r14.json")) as f:
@@ -171,4 +171,4 @@ def test_delta_compares_only_same_sf_and_core_count(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
     assert bench._delta_vs_previous(slow, slow)["vs"] == "BENCH_r14_c8.json"
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
-    assert bench._delta_vs_previous(slow, slow)["vs"] == "BENCH_r15.json"
+    assert bench._delta_vs_previous(slow, slow)["vs"] == "BENCH_r16.json"

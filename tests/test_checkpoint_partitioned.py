@@ -73,6 +73,20 @@ def test_partition_count_is_size_derived(spark, edges):
     assert 2 < big.rdd.getNumPartitions() <= cap
 
 
+def test_keyed_checkpoint_computes_its_input_once(spark):
+    # 1: the count that fills the input's checkpoint (AQE off, so its
+    # shuffle is in the same job). 2: the keyed shuffle into the result.
+    sc = spark.sparkContext
+    group = "test_keyed_checkpoint_computes_its_input_once"
+    sc.setJobGroup(group, group)
+    try:
+        out = checkpoint_partitioned(spark.range(1000).select(F.col("id").alias("src")), "src")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert out.count() == 1000
+
+
 def test_rows_unchanged_and_aqe_restored(spark, edges):
     before = spark.conf.get("spark.sql.adaptive.enabled")
     ep = checkpoint_partitioned(edges, "src", sort=True)

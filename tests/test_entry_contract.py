@@ -56,3 +56,19 @@ def test_contract_is_applied_by_decorator(spark):
         # On assertion failure the foreign TZ must not leak into the
         # session-scoped fixture and cascade into unrelated tests.
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+@pytest.mark.parametrize("n", [1, "above_max"])
+def test_rows_df_accepts_the_same_rows_on_both_paths(spark, n):
+    # One row builds the literal plan; ROWS_DF_MAX + 1 rows fall back to
+    # createDataFrame, which verifies Python types. Both must take an int
+    # in a DOUBLE field and a float in a BIGINT field, cast alike.
+    from projetos_etl_spark.registry._core import ROWS_DF_MAX, rows_df
+
+    n_rows = ROWS_DF_MAX + 1 if n == "above_max" else n
+    rows = [(i, 2.9, None) for i in range(n_rows)]
+    df = rows_df(spark, rows, "x double, k bigint, y double")
+    assert df.schema.simpleString() == "struct<x:double,k:bigint,y:double>"
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == [(float(i), 2, None) for i in range(n_rows)]
+    assert all(type(x) is float for x, _, _ in got)

@@ -11,8 +11,7 @@ distributed write path, no driver collect bottleneck, nothing kept).
 Stability (VERDICT r1 item 6): each query is timed THREE times and the
 median reported — single runs on this box vary up to 3x under system
 contention, which makes regressions unreadable. The raw per-run timings
-(``queries_runs``) and the medallion layer-write vs gold-compute split
-(``write_split``) are spooled to ``BENCH_LOCAL.json`` next to this
+(``queries_runs``) are spooled to ``BENCH_LOCAL.json`` next to this
 script; the stdout line carries medians AND per-query MINS (r8 VERDICT
 item 4: the min is the contention-free floor, so a contended run of
 this script self-adjudicates instead of producing phantom regressions)
@@ -46,7 +45,7 @@ from projetos_etl_spark.session import get_spark
 
 #: Headline queries: one per major operator family, heaviest variants.
 BENCH_QUERIES = [
-    # relational core
+    # Why each entry is here and when it joined: SCALE.md's per-round sections.
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_local_supplier_volume",
@@ -55,17 +54,11 @@ BENCH_QUERIES = [
     "join_broadcast",
     "join_asof_events",
     "join_left",
-    # aggregation / window / scalar families
     "agg_rollup",
     "win_running_sum",
     "fn_json_extract",
-    # round 2 additions: correlated-threshold TPC-H shape + time-series
-    # regularization (hourly spine + forward fill). The headline total
-    # therefore grows vs BENCH_r01 by these two queries' cost — compare
-    # per-query, not the raw total, across rounds.
     "q17_small_quantity_revenue",
     "ts_resample_ffill",
-    # LLM-data ops
     "dedup_exact",
     "dedup_near_minhash",
     "dedup_connected_components",
@@ -73,17 +66,10 @@ BENCH_QUERIES = [
     "text_contamination_ngram",
     "text_unigram_logprob",
     "sim_search_topk",
-    # round 3 additions: ANN compression tier, exact bitmap rollup,
-    # blocked fuzzy matching, iterative graph rank — compare per-query
-    # (the delta block reports this), not the raw total, across rounds.
     "sim_search_pq_adc",
     "bitmap_distinct_rollup",
     "er_blocking_join",
     "graph_pagerank",
-    # round 4 additions: composed IVF+PQ ANN end-state, second-order LM
-    # quality scoring, LSH+exact-verify dedup tier, and the feature-
-    # engineering representatives (compare per-query across rounds, as
-    # above).
     "sim_search_ivf_pq",
     "text_perplexity_bigram",
     "dedup_minhash_verified",
@@ -91,63 +77,30 @@ BENCH_QUERIES = [
     "anomaly_zscore_rolling",
     "maintenance_zorder_stats",
     "join_interval_overlap",
-    # continuing-r4 additions: runtime bloom-filter join pruning, exact
-    # weighted median (pre-agg + window over distinct values), and
-    # oriented-edge triangle counting (compare per-query across rounds).
     "join_bloom_prune",
     "agg_weighted_median",
     "graph_triangle_count",
-    # round 5 additions: distributed PCA (Arrow-batched Gram partials +
-    # driver power iteration), corpus collocations (two word-keyed
-    # shuffles), one-pass Poisson bootstrap (64x replicate explode), and
-    # the hub-capped bipartite projection (compare per-query across
-    # rounds, as above).
     "emb_pca_top_component",
     "text_bigram_pmi",
     "sample_poisson_bootstrap",
     "graph_bipartite_projection",
-    # late round-5: in-engine iterative ML (per-iteration aggregate
-    # jobs — these benchmark the synchronous-iteration floor the same
-    # way graph_pagerank does).
     "ml_logreg_gd",
     "ml_kmeans_lloyd",
-    # round 6 additions: the late-r5 snapshot entries, now benched —
-    # exact split-point search over the distinct-cents candidate grid,
-    # the t-closeness privacy audit, and train/holdout JS divergence
-    # (compare per-query across rounds, as above). NOTE: from r6 the
-    # sim_search_pq_adc / sim_search_ivf_pq entries also run their
-    # contract audit (exact-rerank recheck + planted-probe search), so
-    # their rows are not comparable to pre-r6 rounds.
     "ml_decision_stump",
     "privacy_t_closeness_audit",
     "quality_js_divergence",
-    # round 6 additions: integer-exact iterative graph ops, the per-key
-    # EWMA fold, KN smoothing off one bigram shuffle, and the two-epoch
-    # streaming merge into the table log (compare per-query across
-    # rounds, as above).
     "graph_label_propagation",
     "ts_ewma_anomaly",
     "corpus_kneser_ney_bigram",
     "stream_upsert_tablelog",
-    # round 7 additions: representatives of the previously un-benched r6
-    # families — iterative k-core peeling, the broadcast-LM held-out
-    # perplexity pass, the integer-exact STL decomposition, the nearest
-    # as-of join, and the r7 distributed-rank decile twin (compare
-    # per-query across rounds, as above).
     "graph_kcore_decomposition",
     "eval_heldout_perplexity",
     "ts_stl_decompose",
     "join_asof_nearest",
     "win_ntile_scale",
-    # r7 addition: the second distributed-scan twin — peak concurrency
-    # via per-range-partition prefix sums + broadcast offsets (compare
-    # per-query across rounds, as above).
     "win_max_concurrency_scale",
-    # warehouse maintenance
     "cdc_apply_changes",
-    # end-to-end medallion with real layer writes
     "medallion_gold_profit_mart",
-    # structured streaming (windowed agg through a real streaming query)
     "stream_tumbling_count",
 ]
 
@@ -268,11 +221,8 @@ def main() -> None:
             errors[name] = f"{type(e).__name__}: {e}"[:500]
     names = [n for n in names if n not in errors]
 
-    from projetos_etl_spark import medallion
-
     N_RUNS = 3
     runs: dict[str, list[float]] = {n: [] for n in names}
-    split_runs: dict[str, list[dict[str, float]]] = {}
     for _ in range(N_RUNS):
         for name in names:
             t0 = time.perf_counter()
@@ -281,13 +231,7 @@ def main() -> None:
             except Exception as e:  # noqa: BLE001
                 errors[name] = f"{type(e).__name__}: {e}"[:500]
                 continue
-            elapsed = time.perf_counter() - t0
-            runs[name].append(round(elapsed, 3))
-            if name == "medallion_gold_profit_mart":
-                w = medallion.last_write_seconds()
-                split_runs.setdefault(name, []).append(
-                    {"write": round(w, 3), "compute": round(max(elapsed - w, 0.0), 3)}
-                )
+            runs[name].append(round(time.perf_counter() - t0, 3))
 
     timings = {n: sorted(ts)[len(ts) // 2] for n, ts in runs.items() if ts}
     # The median is the headline (robust to one bad run), but this box's
@@ -298,16 +242,6 @@ def main() -> None:
     # the median sum so the series remains comparable with earlier
     # rounds.
     timings_min = {n: min(ts) for n, ts in runs.items() if ts}
-    # The reported split is the component-wise median across runs, so it
-    # decomposes a number of the same robustness as the headline median
-    # (a single run's split can disagree with the median total).
-    write_split = {
-        name: {
-            comp: sorted(s[comp] for s in splits)[len(splits) // 2]
-            for comp in ("write", "compute")
-        }
-        for name, splits in split_runs.items()
-    }
     delta = _delta_vs_previous(timings, timings_min)
     # Capture the headline run's end load BEFORE the optional scale
     # probe: minutes of probe work would otherwise sit between the
@@ -327,8 +261,6 @@ def main() -> None:
         "queries": timings,
         "queries_min": timings_min,
         "queries_runs": runs,
-        "write_split": write_split,
-        "write_split_runs": split_runs,
         "errors": errors,
         "delta": delta,
         "load_avg_start": load_start,

@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from projetos_etl_spark.medallion import gold_profit_mart, last_write_seconds, run_pipeline
+from projetos_etl_spark.medallion import gold_profit_mart, run_pipeline
 from projetos_etl_spark.plans import partition_filters
 from projetos_etl_spark.registry.medallion import _synth_financial_raw
 from projetos_etl_spark.session import get_spark
@@ -48,7 +48,6 @@ def main(sf_dir: str) -> None:
     for part in sorted(glob.glob(f"{base}/silver/year=*")):
         n_files = len(glob.glob(f"{part}/*.parquet"))
         print(f"  {os.path.basename(part)}: {n_files} files")
-    print(f"layer-write seconds: {last_write_seconds():.2f}")
 
     # Partition pruning in action: a single-year gold scan reads ONE
     # directory (PartitionFilters in the plan).

@@ -27,8 +27,6 @@ downstream gold scans prune partitions. Only xlsx ingest is driver-bound
 
 from __future__ import annotations
 
-import contextvars
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,22 +125,6 @@ def source_http(spark: SparkSession, url: str, out_path: str, fmt: str = "parque
     return spark.read.format(fmt).load(out_path)
 
 
-#: Wall seconds spent inside the layer-write actions of the most recent
-#: ``run_pipeline`` call in THIS context (each write action also executes
-#: its upstream compute — Spark actions are where lineage runs).
-#: ``bench.py`` reads this to split the end-to-end medallion entry's cost
-#: into write vs gold-compute, so regressions in either are visible
-#: separately. A ContextVar so concurrent pipelines on one driver don't
-#: clobber each other's reading.
-_LAST_WRITE_SECONDS: contextvars.ContextVar[float] = contextvars.ContextVar(
-    "medallion_last_write_seconds", default=0.0
-)
-
-
-def last_write_seconds() -> float:
-    return _LAST_WRITE_SECONDS.get()
-
-
 def run_pipeline(
     spark: SparkSession,
     raw: DataFrame,
@@ -169,17 +151,12 @@ def run_pipeline(
       caller's job, on the scan before any wide projection (see
       ``sources.io.spread``): here it would re-plan the whole raw query
       to read its partition count."""
-    import time
-
-    t0 = time.perf_counter()
     rows = Observation()
     sink_parquet(raw.observe(rows, F.count(F.lit(1)).alias("n")), f"{base_dir}/bronze")
-    write_secs = time.perf_counter() - t0
     if rows.get["n"] == 0:
         raise ValueError("DataFrame is empty — nothing to write to the silver layer")
     bronze = spark.read.schema(raw.schema).parquet(f"{base_dir}/bronze")
     silver = silver_conform(bronze, with_ingestion_ts=False)
-    t1 = time.perf_counter()
     # file_groups=4: ~4 writers/files per partition value instead of one
     # file per (task x value) — see sink_partitioned; halves the layer
     # write by removing the small-file explosion while keeping the write
@@ -187,7 +164,6 @@ def run_pipeline(
     sink_partitioned(
         silver, f"{base_dir}/silver", partition_cols or ["year"], file_groups=4
     )
-    _LAST_WRITE_SECONDS.set(write_secs + (time.perf_counter() - t1))
     return spark.read.schema(silver.schema).parquet(f"{base_dir}/silver")
 
 

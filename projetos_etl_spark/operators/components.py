@@ -37,28 +37,12 @@ downstream dedup decision.
 
 from __future__ import annotations
 
-import contextvars
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: Column contract: edges(src, dst) — symmetric (both directions present
 #: or made so here); vertices(id).
 MAX_ROUNDS_DEFAULT = 25
-
-#: Rounds the most recent connected_components call in THIS context took
-#: to converge. A ContextVar, not a module global, so concurrent runs on
-#: one driver (separate threads/contexts) don't clobber each other; the
-#: primary API for callers that need the count is the ``stats`` out-param
-#: of :func:`connected_components` — this accessor is a test convenience.
-_LAST_ROUNDS: contextvars.ContextVar[int] = contextvars.ContextVar(
-    "cc_last_rounds", default=0
-)
-
-
-def last_round_count() -> int:
-    return _LAST_ROUNDS.get()
-
 
 class ConvergenceError(RuntimeError):
     """Raised when a fixpoint loop exhausts max_rounds with changes left."""
@@ -87,32 +71,29 @@ def connected_components(
     deterministic; raises :class:`ConvergenceError` if the fixpoint is not
     reached within ``max_rounds`` (unconverged labels are silently wrong —
     never returned). Pass a dict as ``stats`` to receive
-    ``{"rounds": <rounds to converge>, "algorithm": <name>}`` — the
-    race-free way to read the round count (vs. the context-local
-    :func:`last_round_count` convenience).
+    ``{"rounds": <rounds to converge>, "algorithm": <name>}``.
     """
     if algorithm == "star":
-        out = _components_star(vertices, edges, max_rounds)
+        out, rounds = _components_star(vertices, edges, max_rounds)
     elif algorithm == "label":
-        out = _components_label_prop(vertices, edges, max_rounds)
+        out, rounds = _components_label_prop(vertices, edges, max_rounds)
     else:
         raise ValueError(f"unknown algorithm: {algorithm!r} (use 'star' or 'label')")
     if stats is not None:
-        stats["rounds"] = _LAST_ROUNDS.get()
+        stats["rounds"] = rounds
         stats["algorithm"] = algorithm
     return out
 
 
 def _components_label_prop(
     vertices: DataFrame, edges: DataFrame, max_rounds: int
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     sym = _symmetrize(edges).localCheckpoint(eager=True)
     labels = vertices.select("id", F.col("id").alias("component")).localCheckpoint(
         eager=True
     )
 
-    converged = False
-    for rnd in range(max_rounds):
+    for rnd in range(1, max_rounds + 1):
         # neighbor labels: for each edge (src, dst) the label of dst
         neighbor = (
             sym.join(labels, sym.dst == labels.id)
@@ -133,16 +114,12 @@ def _components_label_prop(
         )
         labels = new_labels
         if changed == 0:
-            converged = True
-            _LAST_ROUNDS.set(rnd + 1)
-            break
-    if not converged:
-        raise ConvergenceError(
-            f"label propagation did not converge in {max_rounds} rounds "
-            "(component diameter exceeds the round budget — raise max_rounds "
-            "or use algorithm='star')"
-        )
-    return labels
+            return labels, rnd
+    raise ConvergenceError(
+        f"label propagation did not converge in {max_rounds} rounds "
+        "(component diameter exceeds the round budget — raise max_rounds "
+        "or use algorithm='star')"
+    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -186,24 +163,22 @@ def _small_star(sym: DataFrame) -> DataFrame:
 
 def _components_star(
     vertices: DataFrame, edges: DataFrame, max_rounds: int
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star to a star-forest fixpoint, then
     one left join to label every vertex (isolated vertices label as
     themselves). Convergence test: the small-star output (a canonical
     large→small edge set) is unchanged — checked with one count over the
-    symmetric difference, riding the round's own materialization."""
+    symmetric difference, riding the round's own materialization. Returns
+    the labels and the rounds taken."""
     cur = _small_star(_symmetrize(edges)).localCheckpoint(eager=True)
 
-    converged = False
-    for rnd in range(max_rounds):
+    for rnd in range(1, max_rounds + 1):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         delta = cur.exceptAll(nxt).union(nxt.exceptAll(cur)).count()
         cur = nxt
         if delta == 0:
-            converged = True
-            _LAST_ROUNDS.set(rnd + 1)
             break
-    if not converged:
+    else:
         raise ConvergenceError(
             f"large-star/small-star did not converge in {max_rounds} rounds; "
             "raise max_rounds (expected ~log2(n) rounds)"
@@ -211,8 +186,9 @@ def _components_star(
     # Fixpoint edges are (child, root) stars; roots/isolated vertices have
     # no outgoing edge and label as themselves.
     roots = cur.groupBy("src").agg(F.min("dst").alias("__root"))
-    return (
+    labels = (
         vertices.select("id")
         .join(roots, vertices.id == roots.src, "left")
         .select("id", F.coalesce("__root", F.col("id")).alias("component"))
     )
+    return labels, rnd

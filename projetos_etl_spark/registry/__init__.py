@@ -9,12 +9,7 @@ from __future__ import annotations
 
 from projetos_etl_spark.registry._core import QueryFn, Registry
 
-# Family order drives registry insertion order, which in turn is the order
-# external verification harnesses iterate ``queries()``.  Rounds 1-2 verified
-# the relational/tpch/medallion/sources prefix; round 3 covered
-# aggregates/windows/setops/scalars (+dedup_near_minhash); round 4 covered
-# streams/similarity/text/corpus/multimodal/dedup[:7].  A per-entry ledger
-# lives in COVERAGE.md ("Driver-coverage ledger").
+# Family order drives registry insertion order after the window head.
 _FAMILIES = [
     "streams",
     "similarity",
@@ -33,36 +28,10 @@ _FAMILIES = [
     "medallion",
 ]
 
-# The driver verifies the FIRST 50 ``queries()`` entries per round.  From
-# round 5 on, the window is this EXPLICIT 50-name list, promoted to the
-# front of the merged registry by :func:`build` — so adding entries to any
-# family module can never silently shift the planned window (the r3/r4
-# failure mode that family reordering alone couldn't fully prevent).
-# Rotate this list (plus the pin in tests/test_registry_window.py and
-# COVERAGE.md's ledger) in ONE commit at each round boundary.
-#
-# Round-14 window — derived by tools/freshness.py::plan_window(
-# TOUCHED_R14, through=13) per the COVERAGE.md freshness policy and
-# asserted by tests/test_freshness.py. Touched this round (21) =
-# the r13 VERDICT's item-1 LEDGER DEBT (the 11 entries the r13
-# optimization commits behaviorally edited AFTER that round's window
-# was planned, so their official driver rows predate their code:
-# ml_kmeans_lloyd, ml_logreg_gd, graph_pagerank,
-# graph_kcore_decomposition, the three sim_search tiers, the
-# win_max_concurrency pair, ts_interpolate_linear,
-# agg_count_min_sketch) plus the r14 optimization touches (the
-# pre-partitioned-checkpoint graph fixpoints graph_label_propagation /
-# graph_kcore_decomposition / graph_pagerank, the co-partitioned
-# graph_bipartite_projection, the distributed-rank
-# feat_quantile_bucketize, medallion_gold_profit_mart's write path,
-# and the five lsh_candidate_* consumers re-planned by the keyed
-# minhash checkpoints: dedup_near_minhash, dedup_minhash_verified,
-# pipeline_training_corpus, pipeline_dedup_clustered,
-# dedup_lsh_recall_eval; plus win_ntile_scale, whose range-partitioned
-# rank pass got the same materialize-before-fan-out hardening as the
-# r14 quantile cuts). 21 <= 50, so the remaining 29 slots take the
-# stalest rows by artifact-derived age: the r5-vintage er/dedup/graph
-# tails and r5/r6-vintage quality/corpus/text rows.
+# The driver verifies the FIRST 50 ``queries()`` entries; :func:`build`
+# promotes this list to the front. It is derived from the committed
+# CORRECTNESS_r*.json files by tools/freshness.py::plan_window (touched
+# entries first, then the stalest), as tests/test_freshness.py asserts.
 _WINDOW_HEAD = [
     "agg_count_min_sketch",
     "dedup_lsh_recall_eval",

@@ -45,6 +45,29 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders ⋈ lineitem on the order key with NULL ``o_custkey`` /
+    ``l_suppkey`` dropped: the purchases every purchase-graph entry
+    selects its customer -> supplier edges from.
+
+    A NULL key is not a vertex (family seven, SCALE.md): an edge needs
+    two identities. The gate also dodges an engine trap — concat('c',
+    NULL) is NULL in Spark but 'c' in DuckDB (which skips NULL args), so
+    ungated NULL keys would mint a different phantom vertex per
+    engine."""
+    o = (
+        load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey")
+        .filter(F.col("o_custkey").isNotNull())
+    )
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_suppkey")
+        .filter(F.col("l_suppkey").isNotNull())
+    )
+    return o.join(li, o.o_orderkey == li.l_orderkey)
+
+
 def _bands_cte_sql() -> str:
     """Shared CTE prefix (shingles -> signatures -> band keys) used by the
     minhash pair oracle and the bucket-stats oracle — generated from the
@@ -692,18 +715,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     on which engine's NULL-concat/NULL-join behavior it hits."""
     from projetos_etl_spark.operators.pagerank import pagerank
 
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey")
-        .filter(F.col("o_custkey").isNotNull())
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .filter(F.col("l_suppkey").isNotNull())
-    )
     edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
+        _purchase_pairs(spark, sf_dir)
         .select(
             F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
             F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
@@ -1034,23 +1047,8 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two mergeable aggregates over the deduped edge set (degree per
     vertex, then vertex count per degree) — the histogram shuffle
     carries one row per DISTINCT degree value, essentially nothing."""
-    # A NULL key is not a vertex (family seven): an edge needs two
-    # identities. The gate also dodges an engine trap — concat('c',
-    # NULL) is NULL in Spark but 'c' in DuckDB (which skips NULL args),
-    # so ungated NULL keys would mint a different phantom vertex per
-    # engine.
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey")
-        .filter(F.col("o_custkey").isNotNull())
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .filter(F.col("l_suppkey").isNotNull())
-    )
     e = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
+        _purchase_pairs(spark, sf_dir)
         .select(
             F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
             F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
@@ -1385,17 +1383,6 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the oracle), which bounds the blowup exactly like the
     hot-bucket cap in ``dedup_near_minhash``. Top-k pairs via
     TakeOrderedAndProject with an (a, b) tie-break."""
-    # NULL keys are not vertices (family-seven convention, SCALE.md).
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey")
-        .filter(F.col("o_custkey").isNotNull())
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .filter(F.col("l_suppkey").isNotNull())
-    )
     # The edge set is referenced by the degree filter AND both self-join
     # sides; the static plan duplicated the scan+join+distinct subtree
     # per reference (r13 plan: 8 FileScans, 10 Exchanges, 0
@@ -1411,7 +1398,7 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 100 TB fact tables are scanned once regardless of reuse
     # heuristics.
     edges = checkpoint_partitioned(
-        o.join(li, o.o_orderkey == li.l_orderkey)
+        _purchase_pairs(spark, sf_dir)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct(),
         "c",
@@ -1524,6 +1511,28 @@ def dedup_exact_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LPA_ITERS = 4
 LPA_SUPP_BASE = 1_000_000
+
+
+def _undirected_purchases(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
+    """The LPA / k-core edge table (src, dst): both directions of each
+    distinct customer-supplier pair, suppliers offset by
+    ``LPA_SUPP_BASE`` into one long id space. The loops join it on
+    ``key`` every round, so it is shuffled onto that key once and
+    checkpointed (``checkpoint_partitioned``, guide §2.4)."""
+    bip = (
+        _purchase_pairs(spark, sf_dir)
+        .select(
+            F.col("o_custkey").cast("long").alias("c"),
+            (F.col("l_suppkey") + F.lit(LPA_SUPP_BASE)).cast("long").alias("s"),
+        )
+        .distinct()
+    )
+    return checkpoint_partitioned(
+        bip.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
+            bip.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+        ),
+        key,
+    )
 
 #: Packed (count, label) argmax base: cnt*2^32 + (2^32-1-label) orders a
 #: LONG exactly like struct(cnt, -label) — max count first, ties to the
@@ -1673,34 +1682,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     node's id) votes straight off the edges, with no join and no
     exchange. Lineage is truncated per round, so the plan stays
     iteration-invariant."""
-    # NULL keys are not vertices (family-seven convention, SCALE.md).
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey")
-        .filter(F.col("o_custkey").isNotNull())
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .filter(F.col("l_suppkey").isNotNull())
-    )
-    bip = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").cast("long").alias("c"),
-            (F.col("l_suppkey") + F.lit(LPA_SUPP_BASE)).cast("long").alias("s"),
-        )
-        .distinct()
-    )
-    # The edge table is joined on ``src`` EVERY round: shuffle it onto
-    # that key ONCE (r14, guide §2.4) — the plain checkpoint used to be
-    # re-exchanged edge-scale per iteration.
-    und = checkpoint_partitioned(
-        bip.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-            bip.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-        ),
-        "src",
-    )
+    und = _undirected_purchases(spark, sf_dir, "src")
     w = Window.partitionBy("label")
     return _lpa_labels(und).select(
         F.col("id").alias("node_id"),
@@ -1753,19 +1735,8 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     mirrored in the oracle); degrees come from the full graph in one
     mergeable aggregate and broadcast-join back onto the pair list;
     top-k is TakeOrderedAndProject, never a global sort of all pairs."""
-    # NULL keys are not vertices (family-seven convention, SCALE.md).
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey")
-        .filter(F.col("o_custkey").isNotNull())
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .filter(F.col("l_suppkey").isNotNull())
-    )
     bip = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
+        _purchase_pairs(spark, sf_dir)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
         .localCheckpoint(eager=True)  # reused by keep/deg/pairs
@@ -1912,34 +1883,9 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     seven): a NULL custkey would mint a NULL node whose edges silently
     vanish in the oracle's recursive equi-joins while surviving Spark's
     degree grouping."""
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey")
-        .filter(F.col("o_custkey").isNotNull())
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .filter(F.col("l_suppkey").isNotNull())
-    )
-    bip = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").cast("long").alias("c"),
-            (F.col("l_suppkey") + F.lit(LPA_SUPP_BASE)).cast("long").alias("s"),
-        )
-        .distinct()
-    )
-    # The edge table is joined on ``dst`` EVERY round (and once more for
-    # the final core-degree pass): shuffle it onto that key ONCE (r14,
-    # guide §2.4) — the plain checkpoint used to be re-exchanged
-    # edge-scale per round.
-    und = checkpoint_partitioned(
-        bip.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-            bip.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-        ),
-        "dst",
-    )
+    # Joined on ``dst`` every round and once more for the final
+    # core-degree pass.
+    und = _undirected_purchases(spark, sf_dir, "dst")
     alive = und.select(F.col("src").alias("id")).distinct().select(
         "id", F.lit(True).alias("alive")
     ).localCheckpoint(eager=True)

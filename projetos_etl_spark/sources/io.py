@@ -12,7 +12,6 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-import os
 import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -231,11 +230,9 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
 #: partitions (AQE's parallelism-first floor -> 32 tasks) cost 4.5 s,
 #: one partition costs 4.2-6.4 s (serialized compute), ~8 MB partitions
 #: cost 2.6-2.9 s — per-task fixed cost dominates below this, lost
-#: parallelism above it. Env-overridable for cluster tuning; the width
-#: cap below, not this floor, is what governs at real scale.
-CKPT_MIN_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CKPT_MIN_PART_BYTES", str(8 << 20))
-)
+#: parallelism above it. The width cap below, not this floor, is what
+#: governs at real scale.
+CKPT_MIN_PARTITION_BYTES = 8 << 20
 
 
 def _field_bytes(dt: T.DataType) -> int:

@@ -215,19 +215,18 @@ def test_star_converges_logarithmically_on_long_chain(spark):
         connected_components,
     )
 
-    from projetos_etl_spark.operators.components import last_round_count
-
     n = 64
     verts = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
+    stats: dict = {}
     got = {
         r.id: r.component
-        for r in connected_components(verts, edges, max_rounds=20).collect()
+        for r in connected_components(verts, edges, max_rounds=20, stats=stats).collect()
     }
     assert got == {i: 0 for i in range(n)}
     # alternating star is O(log^2 n) worst-case, ~2-3x log2(n) observed;
     # the point is it is nowhere near the chain's diameter (63 rounds).
-    assert last_round_count() <= 18
+    assert stats["rounds"] <= 18
 
     # And the label-prop variant must now REFUSE to return unconverged
     # labels (previously it returned silently-wrong output).

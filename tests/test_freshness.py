@@ -1,23 +1,12 @@
-"""The rotation window must DERIVE from the committed driver artifacts.
+"""The verification window derives from the committed driver artifacts.
 
-COVERAGE.md's "Driver-coverage ledger" was hand-maintained through
-round 8; the r8 judge asked for the scheduling input to be computed
-from the CORRECTNESS_r*.json files instead (VERDICT r8 item 3).  These
-tests pin that derivation:
-
-- the cumulative official driver ledger is CLOSED (every registry entry
-  has a green row in some committed artifact);
-- the current ``_WINDOW_HEAD`` equals ``tools.freshness.plan_window``
-  applied to this round's touched list and the artifacts available when
-  the window was planned (``through=PLANNED_THROUGH`` — artifacts from
-  the planned round itself landing later must not flip the pin);
-- the artifact parser agrees with the hand-derived staleness facts the
-  judges verified (per-round green counts, the stalest entries).
-
-Rotating at a round boundary = update TOUCHED + PLANNED_THROUGH here,
-``_WINDOW_HEAD``, the pin in test_registry_window.py, and COVERAGE.md
-in ONE commit.  A window that doesn't satisfy the policy now fails CI
-instead of relying on prose review.
+``registry._WINDOW_HEAD`` (the 50 names promoted to the front of
+``queries()``) must equal ``tools.freshness.plan_window`` applied to the
+touched list below and the ``CORRECTNESS_r*.json`` files that existed
+when the window was planned (``through=PLANNED_THROUGH``: artifacts
+landing later must not flip the pin). The other two tests keep the
+artifact parser honest: every registry entry has a green row, and the
+per-round counts match the judged ledger.
 """
 
 from __future__ import annotations
@@ -25,256 +14,34 @@ from __future__ import annotations
 from projetos_etl_spark.registry import _WINDOW_HEAD, all_queries
 from tools.freshness import last_green, plan_window, staleness_order
 
-# The 19 r10-touched entries plan_window's overflow rule could not seat
-# in the 50-slot r10 window (plan_overflow(TOUCHED_R10, through=9) —
-# their code changed in r10 but their official driver rows predate the
-# hardening, so r10's VERDICT makes them MANDATORY members of
-# touched_r11).
-OVERFLOW_FROM_R10 = [
-    "anomaly_zscore_rolling",
-    "emb_pca_top_component",
-    "emb_quantize_int8",
-    "fn_variant_extract",
-    "join_asof_events",
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_asof_tolerance",
-    "join_bucketed_no_shuffle",
-    "ml_kmeans_lloyd",
-    "sim_search_ivf",
-    "sim_search_ivf_pq",
-    "sim_search_lsh_bucketed",
-    "sim_search_pq_adc",
-    "sim_search_topk",
-    "stream_upsert_tablelog",
-    "ts_ohlc_bars",
-    "udf_scalar",
-    "win_rolling_median",
-]
-
-# Entries whose registry code or oracle r11 ITSELF touched: the two
-# r10 ADVICE closures (agg_collect_sorted's empty-filtered-sequence
-# digest now NULLs like DuckDB's FILTERed list();
-# win_rolling_distinct_unbounded's first-occurrence flag no longer
-# counts a NULL event_type as a type) plus the FIVE entries the
-# strengthened sf_nullkeys axis (NULL event_type + NULL
-# documents.source plants + one positionless-only user) caught
-# diverging: the two distinct-count rollups dropped the untyped group
-# through plain tier joins (NULL != NULL), eval_auc_roc counted
-# unlabeled rows as negatives on the oracle side only,
-# stream_sliding_topk's rank tie-break parked the untyped group at
-# opposite leaderboard ends, and text_keyness_g2 dropped unattributed
-# documents from both tallies while its oracle counted them as
-# reference; plus the SEVEN entries the new sf_nullcats axis (family
-# eight: NULL categorical attributes — mktsegment, orderstatus,
-# orderpriority, returnflag, linestatus, brand, type, nationkey,
-# embeddings.label) caught diverging — SCALE.md round 11 tabulates
-# the mechanisms. ``tools/freshness.py --suggest-touched`` recovers exactly
-# this set from the r11 diff (pinned below).
-REGISTRY_TOUCHED_R11 = [
-    "agg_collect_sorted",
-    "agg_hll_sketch_rollup",
-    "agg_percentile_approx",
-    "bitmap_distinct_rollup",
-    "eval_auc_roc",
-    "feat_hashing_trick",
-    "fn_surrogate_key",
-    "ml_knn_classify",
-    "q12_priority_pivot",
-    "scd2_dimension_upsert",
-    "stream_sliding_topk",
-    "text_keyness_g2",
-    "unpivot_melt",
-    "win_rolling_distinct_unbounded",
-]
-
-# This round's touched list = the mandatory r10 overflow + r11's own
-# registry edits.  33 <= 50, so the window seats ALL touched entries
-# and fills the remaining 17 slots with the stalest r2-vintage rows.
-TOUCHED_R11 = sorted(OVERFLOW_FROM_R10 + REGISTRY_TOUCHED_R11)
-
-# The window was planned from artifacts r1..r13; CORRECTNESS_r14.json
-# landing must not change what the plan derives to.
-PLANNED_THROUGH = 13
-
-# Entries whose registry code or oracle r12 ITSELF touched (grown as
-# the round proceeds; the suggest-touched pin below keeps it honest):
-# agg_percentile_approx (ADVICE r11 — rank window over the non-NULL
-# price population, vacuous-true band for an all-NULL-price group) and
-# q12_priority_pivot (docstring only: the TPC-H NULL-free-assumption
-# citation the r11 VERDICT asked for — a block touch to the suggester,
-# so it rides the window like any code change).
-# Then the round's two fixture-hostility probes: extending sf_nulls
-# with NULL o_totalprice holes caught FOUR diverging entries (win_ntile
-# and win_ntile_scale sorted unpriced orders to opposite decile ends;
-# ml_decision_stump's threshold grid and quality_ks_two_sample's ECDF
-# window shifted by the NULL group at opposite ends of each engine's
-# cumulative sort), and the NEW sf_ties axis (family nine) caught THREE
-# (agg_argmax's bare max_by picked arbitrary tied rows;
-# stream_session_window's oracle split sessions at EXACTLY gap where
-# session_window merges; sample_poisson_bootstrap's 6-dp-rounded
-# replicate means flipped at accumulation-order ulp — now integer-exact
-# in cents).
-# Family ten (sf_extremes, the round's third probe) then touched seven
-# more registry blocks directly — agg_time_decayed_sum,
-# incremental_agg_merge, stream_static_join_enrich (catastrophic
-# ±1e300 sum cancellation: accumulation order decides the total),
-# ts_autocorr_lag and udaf_grouped (oracle isfinite desync with the
-# extended gate), ts_ewma_anomaly and ts_week_over_week (ungated
-# hourly/daily means) — and extended functions/finite.py with MAG_CAP
-# (a finite 1e300 overflows second moments: Spark answers Inf/NaN,
-# DuckDB raises), which changes the generated oracle SQL of EVERY
-# sql_finite consumer.
-# A final family-ten catch landed from the DENSITY-scaled extremes
-# probe (the axis rebuilt from sf0.01): scan_csv_badrecords' good-row
-# checksum was an ungated sum whose ±1e300 cancellation only surfaces
-# with enough corrupt pairs — gated like the rest.
-REGISTRY_TOUCHED_R12 = [
-    "agg_argmax",
-    "agg_percentile_approx",
-    "agg_time_decayed_sum",
-    "incremental_agg_merge",
-    "scan_csv_badrecords",
-    "ml_decision_stump",
-    "q12_priority_pivot",
-    "quality_ks_two_sample",
-    "sample_poisson_bootstrap",
-    # scan_parquet's code is unchanged — the suggester attributes the
-    # module-top `finite` import (added to sources.py for the checksum
-    # gate) to the file's first entry block. Counting it touched is
-    # conservative and free: it was already the stalest fill row, so
-    # it sits in the window either way.
-    "scan_parquet",
-    "stream_session_window",
-    "stream_static_join_enrich",
-    "ts_autocorr_lag",
-    "ts_ewma_anomaly",
-    "ts_week_over_week",
-    "udaf_grouped",
-    "win_ntile",
-    "win_ntile_scale",
-]
-
-# The other finite-gate consumers: their registry blocks are unchanged
-# (the suggester lists functions/finite.py and streaming/stateful.py
-# under "review"), but their SEMANTICS changed with the shared gate, so
-# freshness counts them touched — the r10 precedent, when the gate was
-# introduced.
-GATE_TOUCHED_R12 = [
-    "anomaly_zscore_rolling",
-    "feat_impute_missing",
-    "incremental_var_merge",
-    "stream_custom_stateful_profile",
-    "stream_upsert_tablelog",
-    "ts_interpolate_linear",
-    "ts_resample_ffill",
-    "ts_stl_decompose",
-    "win_rolling_median",
-]
-
-# The r12 touched list = the registry-block edits plus the
-# gate-impacted consumers (r11 left no overflow debt).  27 <= 50
-# (18 registry + 9 gate-touched), so the r12 window seated all touched
-# entries and filled the remaining 23 slots with the stalest rows by
-# artifact-derived age: the r2-vintage scan family and the r3-vintage
-# agg/window/setops tails.  Kept verbatim for the r12-diff recovery
-# pin below.
-TOUCHED_R12 = sorted(set(REGISTRY_TOUCHED_R12) | set(GATE_TOUCHED_R12))
-
-# Entries whose registry code or oracle r13 ITSELF touched (grown as
-# the round proceeds; the suggest-touched pin below keeps it honest):
-# the r12 ADVICE MAG_CAP-interpolation closure rebuilt the
-# hand-written oracle WHERE clauses of ts_autocorr_lag and
-# udaf_grouped from functions/finite.py::sql_finite_pred.  The
-# generated SQL is BYTE-IDENTICAL (MAG_CAP_SQL normalizes repr's
-# 1e+75 back to the 1e75 the oracles always spelled), so unlike r12 —
-# when the gate's semantics changed and every sql_finite consumer was
-# gate-touched — there is NO gate-touched set this round.  fn_string
-# and ts_resample_ffill ride as conservative suggester-attribution
-# touches: the new module-top sql_finite_pred imports in scalars.py
-# and prep.py land in each file's first entry block (the scan_parquet
-# precedent from r12).
-REGISTRY_TOUCHED_R13 = [
-    "fn_string",
-    "ts_autocorr_lag",
-    "ts_resample_ffill",
-    "udaf_grouped",
-]
-
-# The r13 touched list (r12 left no overflow debt).  4 <= 50, so
-# the r13 window seated all touched entries and filled the remaining
-# 46 slots with the stalest rows by artifact-derived age: the
-# r3-vintage setops/fn/stream tails and the r4-vintage
-# text/corpus/dedup families — exactly the rotation the r12 VERDICT
-# prescribed.  Kept verbatim for the r13-diff recovery pin below.
-TOUCHED_R13 = sorted(REGISTRY_TOUCHED_R13)
-
-# The r13 VERDICT's item-1 LEDGER DEBT: the r13 optimization commits
-# (1adb1f7, 84b2878, fb6e6a4) behaviorally edited these entries AFTER
-# the r13 window was planned, so their official driver rows predate
-# their code (only ts_resample_ffill, seated in the r13 window, got a
-# post-change row).  MANDATORY members of the r14 touched list.
-DEBT_FROM_R13 = [
+# Entries whose code or oracle changed after their last green driver row
+# when the window was planned; they take the first slots of the window.
+TOUCHED = [
     "agg_count_min_sketch",
-    "graph_kcore_decomposition",
-    "graph_pagerank",
-    "ml_kmeans_lloyd",
-    "ml_logreg_gd",
-    "sim_search_ivf",
-    "sim_search_ivf_pq",
-    "sim_search_pq_adc",
-    "ts_interpolate_linear",
-    "win_max_concurrency",
-    "win_max_concurrency_scale",
-]
-
-# Entries whose registry-module source blocks the r14 diff touches
-# (``tools/freshness.py --suggest-touched`` recovers exactly this set;
-# pinned below): the pre-partitioned-checkpoint LPA and k-core loops
-# and their helpers, the co-partitioned bipartite projection, the
-# distributed-rank quantile cuts, and dedup_near_minhash via the
-# module-top checkpoint_partitioned import landing in dedup.py's first
-# entry block (the scan_parquet precedent); win_ntile_scale joined
-# when the r14 review hardened its range-partitioned rank pass with
-# the same materialize-before-fan-out checkpoint as the quantile cuts.
-REGISTRY_TOUCHED_R14 = [
+    "dedup_lsh_recall_eval",
+    "dedup_minhash_verified",
     "dedup_near_minhash",
-    "win_ntile_scale",
     "feat_quantile_bucketize",
     "graph_bipartite_projection",
     "graph_kcore_decomposition",
     "graph_label_propagation",
-]
-
-# Engine-module (operators/sources/medallion) r14 edits whose entry
-# impact is judgment, per the suggester's "review" convention:
-# operators/pagerank.py (graph_pagerank), operators/kmeans.py (the
-# uniqueness-assert, ml_kmeans_lloyd), operators/logreg.py (the __w
-# rename, ml_logreg_gd), operators/minhash.py's keyed checkpoints
-# (every lsh_candidate_* consumer: dedup_near_minhash,
-# dedup_minhash_verified, pipeline_training_corpus,
-# pipeline_dedup_clustered, dedup_lsh_recall_eval — NOT the two
-# band_buckets-only consumers dedup_minhash_incremental /
-# dedup_lsh_bucket_stats, whose plans are unchanged), and
-# medallion.py's run_pipeline (medallion_gold_profit_mart).
-ENGINE_TOUCHED_R14 = [
-    "dedup_lsh_recall_eval",
-    "dedup_minhash_verified",
     "graph_pagerank",
     "medallion_gold_profit_mart",
     "ml_kmeans_lloyd",
     "ml_logreg_gd",
     "pipeline_dedup_clustered",
     "pipeline_training_corpus",
+    "sim_search_ivf",
+    "sim_search_ivf_pq",
+    "sim_search_pq_adc",
+    "ts_interpolate_linear",
+    "win_max_concurrency",
+    "win_max_concurrency_scale",
+    "win_ntile_scale",
 ]
 
-# This round's touched list = r13 ledger debt + r14 registry edits +
-# r14 engine-impact judgment.  21 <= 50, so the window seats ALL
-# touched entries and fills the remaining 30 slots with the stalest
-# rows by artifact-derived age.
-TOUCHED_R14 = sorted(
-    set(DEBT_FROM_R13) | set(REGISTRY_TOUCHED_R14) | set(ENGINE_TOUCHED_R14)
-)
+# The window was planned from artifacts r1..r13.
+PLANNED_THROUGH = 13
 
 
 def test_ledger_is_closed():
@@ -284,7 +51,7 @@ def test_ledger_is_closed():
 
 
 def test_window_derives_from_artifacts():
-    derived = plan_window(TOUCHED_R14, through=PLANNED_THROUGH)
+    derived = plan_window(TOUCHED, through=PLANNED_THROUGH)
     assert _WINDOW_HEAD == derived, (
         "_WINDOW_HEAD drifted from the artifact-derived policy window "
         "(touched-first, then stalest by last-green round / artifact "
@@ -292,41 +59,9 @@ def test_window_derives_from_artifacts():
     )
 
 
-def test_overflow_debt_is_flushed():
-    # 21 touched <= 50 slots: no overflow this round, and the ledger
-    # keeps ZERO entries whose official row predates their code once
-    # CORRECTNESS_r14 lands — including the 11-entry r13 debt.
-    from tools.freshness import plan_overflow
-
-    assert plan_overflow(TOUCHED_R14, through=PLANNED_THROUGH) == []
-    assert set(TOUCHED_R14) <= set(_WINDOW_HEAD)
-    assert set(DEBT_FROM_R13) <= set(_WINDOW_HEAD)
-
-
-def test_overflow_list_matches_r10_artifacts():
-    # The mandatory carry-over is itself artifact-derived: it must equal
-    # plan_overflow applied to the pinned r10 touched list and the
-    # r1..r9 artifacts (the derivation the r10 rotation used).
-    from tools.freshness import plan_overflow
-
-    touched_r10 = _R10_TOUCHED
-    assert sorted(plan_overflow(touched_r10, through=9)) == OVERFLOW_FROM_R10
-
-
-def test_touched_entries_were_green_before():
-    # "Touched" means RE-verification: every touched entry must already
-    # have a green row (a never-green entry would be a ledger hole, not
-    # a freshness item).
-    lg = last_green(through=PLANNED_THROUGH)
-    assert all(n in lg for n in TOUCHED_R14)
-
-
 def test_staleness_facts_match_judged_ledger():
-    # Anchor the parser against facts the r13 judge verified by hand:
-    # the per-round last-green counts partition all 326 entries (the
-    # r13 window re-greened 50 — the r3/r4-vintage tails are now all
-    # refreshed, so the oldest vintage is r5), and the stalest entries
-    # are the r5-vintage er/dedup tails.
+    # The per-round last-green counts partition all 326 entries, and the
+    # stalest entries are the r5-vintage er/dedup tails.
     lg = last_green(through=PLANNED_THROUGH)
     assert len(lg) == 326
     by_round: dict[int, int] = {}
@@ -339,192 +74,3 @@ def test_staleness_facts_match_judged_ledger():
     order = staleness_order(through=PLANNED_THROUGH)
     assert order[:2] == ["er_blocking_join", "dedup_ngram_containment"]
     assert len(order) == 326
-
-
-def test_window_names_all_in_coverage_ledger_row():
-    # COVERAGE.md documents the same 50 names in its r12 window row; the
-    # prose must not drift from the code (the r7 judge caught exactly
-    # this class of drift once).
-    import os
-
-    md = open(
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "COVERAGE.md")
-    ).read()
-    row = next(
-        (ln for ln in md.splitlines() if ln.startswith("| **r14 window**")), None
-    )
-    assert row is not None, "COVERAGE.md lacks the r14 window ledger row"
-    for name in _WINDOW_HEAD:
-        assert f"`{name}`" in row, f"{name} missing from COVERAGE.md r14 row"
-
-
-def test_entry_blocks_attribute_helpers_to_following_entry():
-    # The touched-list suggester attributes an oracle-helper function
-    # (defined between entries, consumed by the NEXT decorator as
-    # oracle=_x_oracle()) to the entry that follows it.
-    import os
-
-    from tools.freshness import _registry_entry_blocks
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "projetos_etl_spark", "registry", "similarity.py",
-    )
-    blocks = {n: (lo, hi) for n, lo, hi in _registry_entry_blocks(path)}
-    src = open(path).read().splitlines()
-    helper_line = next(
-        i for i, ln in enumerate(src, 1) if ln.startswith("def _ann_contract_oracle")
-    )
-    lo, hi = blocks["sim_search_ivf"]  # first consumer of that oracle
-    assert lo <= helper_line <= hi
-    # blocks are disjoint, ordered, and cover every entry exactly once
-    names = [n for n, _, _ in _registry_entry_blocks(path)]
-    assert len(names) == len(set(names))
-
-
-def test_suggest_touched_empty_diff_suggests_nothing():
-    from tools.freshness import suggest_touched
-
-    s = suggest_touched(since="HEAD")
-    assert s["entries"] == [] and s["review"] == []
-
-
-def test_suggest_touched_recovers_r13_registry_entries():
-    # Against the r13 diff itself (last CORRECTNESS commit — the r12
-    # artifact landing — .. HEAD) the suggester must recover exactly the
-    # registry-module entries r13 touched (REGISTRY_TOUCHED_R13).  If a
-    # later r13 edit touches more registry blocks, this pin fails on
-    # purpose: grow REGISTRY_TOUCHED_R13 and re-derive the rotation
-    # (freshness beats window stability).  Skipped gracefully once a
-    # later round's artifacts land (the diff base moves past r12's
-    # artifact commit — detected by CORRECTNESS_r13.json existing in
-    # git history, the same signal suggest_touched keys off).
-    import os
-    import subprocess
-
-    from tools.freshness import suggest_touched
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r13_landed = subprocess.run(
-        ["git", "log", "-1", "--format=%H", "--", "CORRECTNESS_r13.json"],
-        capture_output=True, text=True, cwd=repo,
-    ).stdout.strip()
-    if r13_landed:
-        import pytest as _pytest
-
-        _pytest.skip("r13 diff base has moved on")
-    s = suggest_touched()
-    assert set(s["entries"]) == set(REGISTRY_TOUCHED_R13)
-
-
-def test_suggest_touched_recovers_r14_registry_entries():
-    # Against the r14 diff itself (last CORRECTNESS commit — the r13
-    # artifact landing — .. HEAD) the suggester must recover exactly the
-    # registry-module entries r14 touched (REGISTRY_TOUCHED_R14).  If a
-    # later r14 edit touches more registry blocks, this pin fails on
-    # purpose: grow REGISTRY_TOUCHED_R14 and re-derive the rotation
-    # (freshness beats window stability).  Skipped once the r14
-    # artifacts land and the diff base moves past them — BUT the r13
-    # lesson stands: this skip is NOT permission to ship
-    # behaviorally-edited entries unseated; the r15 rotation must fold
-    # any post-window r14 edits into ITS touched list.
-    import os
-    import subprocess
-
-    from tools.freshness import suggest_touched
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r14_landed = subprocess.run(
-        ["git", "log", "-1", "--format=%H", "--", "CORRECTNESS_r14.json"],
-        capture_output=True, text=True, cwd=repo,
-    ).stdout.strip()
-    if r14_landed:
-        import pytest as _pytest
-
-        _pytest.skip("r14 diff base has moved on")
-    s = suggest_touched()
-    assert set(s["entries"]) == set(REGISTRY_TOUCHED_R14)
-    # The engine-module judgment calls must at least be FLAGGED for
-    # review by the suggester (their paths appear in the diff).
-    # (medallion.py sits outside the suggester's review globs; its
-    # entry impact is pinned via ENGINE_TOUCHED_R14 directly.)
-    review = "\n".join(s["review"])
-    for frag in ("operators/minhash.py", "operators/pagerank.py", "sources/io.py"):
-        assert frag in review
-
-
-# The r10 touched list (69 entries, pinned in r10's vintage of this
-# file) — kept verbatim so plan_overflow's carry-over derivation stays
-# reproducible from committed history.
-_R10_TOUCHED = [
-    "agg_collect_sorted",
-    "agg_markov_transitions",
-    "anomaly_zscore_rolling",
-    "dedup_embedding_cosine",
-    "emb_matryoshka_overlap",
-    "emb_norm_outlier_audit",
-    "emb_pca_top_component",
-    "emb_quantize_int8",
-    "eval_ndcg_at_k",
-    "eval_precision_recall_f1",
-    "feat_impute_missing",
-    "fn_json_extract",
-    "fn_variant_extract",
-    "graph_bipartite_projection",
-    "graph_degree_stats",
-    "graph_jaccard_link_prediction",
-    "graph_kcore_decomposition",
-    "graph_label_propagation",
-    "graph_pagerank",
-    "incremental_var_merge",
-    "join_asof_events",
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_asof_tolerance",
-    "join_bucketed_no_shuffle",
-    "maintenance_retention_sweep",
-    "maintenance_zorder_stats",
-    "medallion_gold_profit_mart",
-    "medallion_silver_conform",
-    "ml_kmeans_lloyd",
-    "ml_knn_classify",
-    "pipeline_quality_gate_fused",
-    "quality_referential_integrity",
-    "quality_table_checksum",
-    "scan_csv_multiline_quoted",
-    "sessionize_events",
-    "sim_hard_negative_mining",
-    "sim_range_search",
-    "sim_search_ivf",
-    "sim_search_ivf_pq",
-    "sim_search_lsh_bucketed",
-    "sim_search_pq_adc",
-    "sim_search_topk",
-    "stream_custom_stateful_profile",
-    "stream_session_close_stateful",
-    "stream_session_window",
-    "stream_sliding_agg",
-    "stream_sliding_topk",
-    "stream_stream_left_outer_join",
-    "stream_tumbling_count",
-    "stream_upsert_tablelog",
-    "text_quality_score",
-    "text_tokens_bpe_regex",
-    "ts_autocorr_lag",
-    "ts_changepoint_cusum",
-    "ts_ewma_anomaly",
-    "ts_interpolate_linear",
-    "ts_ohlc_bars",
-    "ts_resample_ffill",
-    "ts_stl_decompose",
-    "ts_week_over_week",
-    "udaf_grouped",
-    "udf_scalar",
-    "win_lag_delta",
-    "win_moving_avg_frame",
-    "win_rank_topk_per_group",
-    "win_rolling_distinct",
-    "win_rolling_distinct_unbounded",
-    "win_rolling_median",
-]

@@ -1,103 +1,15 @@
-"""Pin the driver verification window.
-
-External correctness harnesses verify the FIRST 50 ``queries()`` entries
-in registry insertion order per round; COVERAGE.md's ledger plans which
-entries each round's window covers.  From round 5 the window is the
-EXPLICIT name list ``registry.__init__._WINDOW_HEAD``, promoted to the
-front of the merged registry — so adding entries to any family module
-can no longer shift the window.  This test pins the current round's
-window to the documented plan so any accidental edit of ``_WINDOW_HEAD``
-(or a build() regression) fails CI with an explanation.
-
-From round 9 the plan itself is DERIVED from the committed
-CORRECTNESS_r*.json artifacts (tools/freshness.py) — see
-tests/test_freshness.py, which asserts this pinned list equals the
-policy derivation.  When the rotation is INTENTIONALLY changed at a
-round boundary, regenerate this pinned list, the touched list in
-test_freshness.py, and COVERAGE.md's ledger in the same commit as
-``_WINDOW_HEAD``.
-"""
+"""The driver verifies the first 50 ``queries()`` entries:
+``registry.build`` must put ``_WINDOW_HEAD`` there, in its order.
+tests/test_freshness.py pins what the list contains."""
 
 from __future__ import annotations
 
 from projetos_etl_spark.registry import _WINDOW_HEAD, all_queries
 
-# The r14 window: the 21 touched entries first — the r13 VERDICT's
-# item-1 ledger debt (11 entries whose r13 optimization edits landed
-# AFTER that round's window was planned) plus the r14 optimization
-# touches (pre-partitioned-checkpoint graph fixpoints, co-partitioned
-# bipartite projection, distributed-rank quantile cuts, the medallion
-# write path, and the five lsh_candidate_* consumers re-planned by the
-# keyed minhash checkpoints) — then the 29 stalest remaining entries by
-# artifact-derived age (the r5-vintage er/dedup/graph tails and the
-# r5/r6-vintage quality/corpus/text rows).
-R14_WINDOW = [
-    "agg_count_min_sketch",
-    "dedup_lsh_recall_eval",
-    "dedup_minhash_verified",
-    "dedup_near_minhash",
-    "feat_quantile_bucketize",
-    "graph_bipartite_projection",
-    "graph_kcore_decomposition",
-    "graph_label_propagation",
-    "graph_pagerank",
-    "medallion_gold_profit_mart",
-    "ml_kmeans_lloyd",
-    "ml_logreg_gd",
-    "pipeline_dedup_clustered",
-    "pipeline_training_corpus",
-    "sim_search_ivf",
-    "sim_search_ivf_pq",
-    "sim_search_pq_adc",
-    "ts_interpolate_linear",
-    "win_max_concurrency",
-    "win_max_concurrency_scale",
-    "win_ntile_scale",
-    "er_blocking_join",
-    "dedup_ngram_containment",
-    "er_blocking_multipass",
-    "dedup_simhash_hamming",
-    "graph_triangle_count",
-    "er_golden_record",
-    "quality_schema_profile",
-    "split_train_test_hash",
-    "join_spatial_grid_radius",
-    "quality_outlier_iqr",
-    "ts_gap_detect",
-    "agg_heavy_hitters",
-    "corpus_resample_to_mix",
-    "text_perplexity_bigram",
-    "quality_psi_drift",
-    "text_normalize_dedup",
-    "corpus_shuffle_shards",
-    "feat_onehot_topn",
-    "text_langid",
-    "text_bigram_pmi",
-    "text_bpe_merge_step",
-    "corpus_temperature_mix",
-    "pipeline_span_dedup",
-    "dedup_exact_keep_best",
-    "quality_expectation_suite",
-    "join_interval_overlap",
-    "quality_benford_audit",
-    "corpus_domain_cap",
-    "quality_outlier_mad",
-]
 
 def test_driver_window_matches_coverage_plan():
-    assert len(R14_WINDOW) == 50
-    got = list(all_queries())[: len(R14_WINDOW)]
-    assert got == R14_WINDOW, (
-        "The first-50 verification window shifted. The window is the "
-        "explicit registry.__init__._WINDOW_HEAD list; if you changed it, "
-        "update this pin AND COVERAGE.md's ledger deliberately."
-    )
-
-
-def test_window_head_is_the_pin():
-    # _WINDOW_HEAD and this pin must be the same list; divergence means a
-    # half-finished rotation commit.
-    assert _WINDOW_HEAD == R14_WINDOW
+    assert len(_WINDOW_HEAD) == 50
+    assert list(all_queries())[:50] == _WINDOW_HEAD
 
 
 def test_no_window_name_collisions():

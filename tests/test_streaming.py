@@ -5,8 +5,6 @@ file drop per batch) + processAllAvailable between drops."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,8 +28,8 @@ def _events(spark, rows):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _run_two_batches(spark, agg_builder, batch1, batch2, mode="update"):
-    watch = tempfile.mkdtemp(prefix="pes_stest_")
+def _run_two_batches(spark, watch, agg_builder, batch1, batch2, mode="update"):
+    watch = str(watch)
     stage_files(batch1, watch, "b1")
     stream = spark.readStream.format("parquet").schema(batch1.schema).load(watch)
     out = agg_builder(stream)
@@ -48,7 +46,7 @@ def _run_two_batches(spark, agg_builder, batch1, batch2, mode="update"):
     return after_b1, after_b2
 
 
-def test_watermark_drops_late_window(spark):
+def test_watermark_drops_late_window(spark, tmp_path):
     # batch1 reaches 12:00 -> watermark 11:00 (1h delay); batch2's 08:30
     # event lands in window [08:00,09:00) which ended before the watermark
     # -> dropped; its 11:30 event is within the watermark -> counted.
@@ -63,17 +61,17 @@ def test_watermark_drops_late_window(spark):
             .select(F.hour("w.start").alias("h"), "n")
         )
 
-    after_b1, after_b2 = _run_two_batches(spark, agg, batch1, batch2)
+    after_b1, after_b2 = _run_two_batches(spark, tmp_path, agg, batch1, batch2)
     assert sorted(after_b1) == [(10, 1), (12, 1)]
     emitted_b2 = sorted(set(after_b2) - set(after_b1))
     assert emitted_b2 == [(11, 1)]  # the 08:30 event vanished
 
 
-def test_stateful_profile_continues_across_batches(spark):
+def test_stateful_profile_continues_across_batches(spark, tmp_path):
     batch1 = _events(spark, [(1, 9, 0, 2.0), (1, 9, 30, 3.0), (2, 9, 0, 7.0)])
     batch2 = _events(spark, [(1, 10, 0, 5.0)])
     after_b1, after_b2 = _run_two_batches(
-        spark, running_user_profile, batch1, batch2
+        spark, tmp_path, running_user_profile, batch1, batch2
     )
     assert (1, 2, 5.0, 3.0) in after_b1  # user 1: 2 events, sum 5, max 3
     assert (2, 1, 7.0, 7.0) in after_b1
@@ -81,12 +79,12 @@ def test_stateful_profile_continues_across_batches(spark):
     assert (1, 3, 10.0, 5.0) in after_b2
 
 
-def test_session_window_merges_within_gap(spark):
+def test_session_window_merges_within_gap(spark, tmp_path):
     ev = _events(
         spark,
         [(1, 9, 0, 1.0), (1, 9, 20, 1.0), (1, 12, 0, 1.0), (2, 9, 5, 1.0)],
     )
-    watch = tempfile.mkdtemp(prefix="pes_sess_")
+    watch = str(tmp_path)
     stage_files(ev, watch, "b1")
     stream = spark.readStream.format("parquet").schema(ev.schema).load(watch)
     out = session_agg(stream, gap="30 minutes")
@@ -214,7 +212,7 @@ def test_stream_tumbling_matches_batch_tumbling(spark):
     assert got == want and len(want) > 0
 
 
-def test_stateful_agg_on_rocksdb_state_store(spark):
+def test_stateful_agg_on_rocksdb_state_store(spark, tmp_path):
     """The 100 TB streaming-state posture: with the RocksDB state store
     provider, per-key aggregation state spills to local disk instead of
     living on the executor heap — the difference between 'state fits in
@@ -238,7 +236,7 @@ def test_stateful_agg_on_rocksdb_state_store(spark):
                 F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
             )
 
-        after_b1, after_b2 = _run_two_batches(spark, agg, batch1, batch2)
+        after_b1, after_b2 = _run_two_batches(spark, tmp_path, agg, batch1, batch2)
         assert sorted(after_b1) == [(1, 1, 2.0), (2, 1, 3.0)]
         # user 1's state carried across the batch boundary through RocksDB.
         assert (1, 2, 7.0) in after_b2
@@ -246,7 +244,7 @@ def test_stateful_agg_on_rocksdb_state_store(spark):
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
-def test_session_close_emits_only_proven_sessions(spark):
+def test_session_close_emits_only_proven_sessions(spark, tmp_path):
     """A session is emitted exactly once, and only when a later event
     proves the gap — across micro-batch boundaries: batch2's late event
     closes batch1's open session; the new session stays unemitted."""
@@ -258,7 +256,7 @@ def test_session_close_emits_only_proven_sessions(spark):
     batch2 = _events(spark, [(1, 16, 0, 1.0)])
 
     after_b1, after_b2 = _run_two_batches(
-        spark, closed_sessions, batch1, batch2, mode="append"
+        spark, tmp_path, closed_sessions, batch1, batch2, mode="append"
     )
     assert after_b1 == []  # nothing proven yet
     assert len(after_b2) == 1

@@ -1,27 +1,23 @@
-"""Derive the driver-ledger freshness schedule from CORRECTNESS_r*.json.
+"""Derive the driver verification window from CORRECTNESS_r*.json.
 
-COVERAGE.md's "Driver-coverage ledger" used to be hand-maintained; the
-round-8 judge asked for the scheduling input to be computed from the
-committed artifacts instead (VERDICT r8 item 3).  This tool recomputes,
-per registry entry, the most recent round with a GREEN official driver
-row — rows_match AND schema_match AND hash_match, err null — and orders
-entries stalest-first, which is exactly the input each round's
-``_WINDOW_HEAD`` rotation needs.
+For each registry entry this finds the most recent round with a GREEN
+official driver row (rows_match AND schema_match AND hash_match, err
+null) and orders entries stalest-first.
 
-Window policy (COVERAGE.md header): a round's 50-slot window takes
-(1) entries whose code/oracle changed since their last green row
-("touched" — supplied per round, not derivable from artifacts), then
-(2) the stalest remaining entries by artifact-derived age.  Staleness
-ties (same round) break by position inside that round's artifact file,
-which is the registry order the driver verified them in — fully
-deterministic and independent of the CURRENT registry order (which the
-rotation itself reshuffles).
+Window policy (``plan_window``): the 50-slot window takes (1) entries
+whose code/oracle changed since their last green row ("touched",
+supplied by hand, not derivable from artifacts), then (2) the stalest
+remaining entries by artifact-derived age.  Staleness ties (same round)
+break by position inside that round's artifact file, which is the
+registry order the driver verified them in, so the order is
+deterministic and independent of the current registry order.
 
 CLI:
-    python tools/freshness.py                 # last-green table, stalest first
-    python tools/freshness.py --stalest 22 --exclude a,b --through 8
+    python tools/freshness.py [--through R]   # last-green table, stalest first
 
-Library use (tests/test_freshness.py pins the r9 window with this):
+(``head -N`` keeps the N stalest; ``grep -v`` drops names.)
+
+Library use (tests/test_freshness.py pins ``_WINDOW_HEAD`` with this):
     from tools.freshness import last_green, staleness_order, plan_window
 """
 
@@ -109,12 +105,10 @@ def plan_window(
     predate the code that now implements them), then the stalest
     remaining ever-green entries until ``size`` slots are filled.
 
-    OVERFLOW rule (r10, when a round touches more entries than the
-    window holds): the window takes the ``size`` STALEST touched
-    entries by the same artifact-derived order — deferring the touched
-    entries whose official rows are FRESHEST is the least-risk
-    deferral — and the remainder (``plan_overflow``) carries to the
-    next round's touched list, documented in COVERAGE.md."""
+    Overflow (more touched entries than slots): the window takes the
+    ``size`` STALEST touched entries by the same artifact-derived order —
+    deferring the touched entries whose official rows are FRESHEST is
+    the least-risk deferral; the rest carry to the next touched list."""
     if len(set(touched)) != len(touched):
         raise ValueError("touched list has duplicates")
     if len(touched) > size:
@@ -124,140 +118,16 @@ def plan_window(
     return list(touched) + fill[: size - len(touched)]
 
 
-def plan_overflow(
-    touched: list[str],
-    size: int = WINDOW_SIZE,
-    repo: str = REPO,
-    through: int | None = None,
-) -> list[str]:
-    """The touched entries ``plan_window`` could NOT seat (freshest
-    official rows first deferred, so this is staleness-ordered too):
-    they lead the NEXT round's touched list."""
-    if len(touched) <= size:
-        return []
-    order = {n: i for i, n in enumerate(staleness_order(repo, through))}
-    return sorted(touched, key=lambda n: order[n])[size:]
-
-
-def _registry_entry_blocks(path: str) -> list[tuple[str, int, int]]:
-    """(entry_name, first_line, last_line) for every ``@REG.add("...")``
-    block in a registry module.  A block runs from the line after the
-    PREVIOUS entry's function ends to this entry's function end — so
-    oracle-helper functions and constants defined between entries
-    attribute to the FOLLOWING entry, which matches how they are
-    consumed (``oracle=_x_oracle()`` in the next decorator)."""
-    import ast
-
-    with open(path) as f:
-        src = f.read()
-    tree = ast.parse(src)
-    blocks: list[tuple[str, int, int]] = []
-    prev_end = 0
-    for node in tree.body:
-        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            continue
-        name = None
-        for dec in node.decorator_list:
-            if not (isinstance(dec, ast.Call)
-                    and isinstance(dec.func, ast.Attribute)
-                    and dec.func.attr == "add"):
-                continue
-            if dec.args and isinstance(dec.args[0], ast.Constant):
-                name = dec.args[0].value
-        if name is None:
-            continue
-        blocks.append((name, prev_end + 1, node.end_lineno))
-        prev_end = node.end_lineno
-    return blocks
-
-
-def suggest_touched(repo: str = REPO, since: str | None = None) -> dict:
-    """Best-effort SUGGESTION for a round's touched list, derived from
-    the git diff since ``since`` (default: the last commit that touched
-    a CORRECTNESS artifact — i.e., everything this round changed).
-
-    Returns {"since": ref, "entries": sorted names whose registry-module
-    source block the diff intersects, "review": non-registry engine
-    paths that changed (operators/, sources/, functions/, streaming/) —
-    their entry impact is judgment, which is exactly why the pinned
-    TOUCHED list in tests/test_freshness.py still exists}.  The
-    suggestion is an input to that judgment, not a replacement.
-    """
-    import subprocess
-
-    def _git(*argv: str) -> str:
-        return subprocess.run(
-            ["git", "-C", repo, *argv], check=True, capture_output=True, text=True
-        ).stdout
-
-    if since is None:
-        since = _git(
-            "log", "-1", "--format=%H", "--", "CORRECTNESS_r*.json"
-        ).strip()
-        if not since:
-            raise RuntimeError("no CORRECTNESS artifact commit found")
-    changed = [p for p in _git("diff", "--name-only", f"{since}..HEAD").splitlines() if p]
-    entries: set[str] = set()
-    review: list[str] = []
-    for path in changed:
-        m = re.match(r"projetos_etl_spark/registry/(\w+)\.py$", path)
-        if m and m.group(1) not in ("_core", "__init__"):
-            # Map changed hunk line ranges (new-file side) to entry blocks.
-            full = os.path.join(repo, path)
-            if not os.path.exists(full):
-                continue
-            blocks = _registry_entry_blocks(full)
-            diff = _git("diff", "-U0", f"{since}..HEAD", "--", path)
-            for hm in re.finditer(r"^@@ -\S+ \+(\d+)(?:,(\d+))? @@", diff, re.M):
-                lo = int(hm.group(1))
-                hi = lo + max(int(hm.group(2) or 1) - 1, 0)
-                for name, b_lo, b_hi in blocks:
-                    if lo <= b_hi and hi >= b_lo:
-                        entries.add(name)
-        elif re.match(
-            r"projetos_etl_spark/(operators|sources|functions|streaming)/", path
-        ):
-            review.append(path)
-    return {"since": since, "entries": sorted(entries), "review": review}
-
-
 def main() -> None:
     import argparse
 
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--stalest", type=int, default=None, metavar="N",
-                    help="print only the N stalest entries")
-    ap.add_argument("--exclude", default="", metavar="a,b",
-                    help="names to skip (e.g. a planned touched list)")
     ap.add_argument("--through", type=int, default=None, metavar="R",
                     help="consider artifacts up to round R only")
-    ap.add_argument("--suggest-touched", nargs="?", const="", default=None,
-                    metavar="REF",
-                    help="suggest this round's touched list from the git "
-                         "diff since REF (default: last CORRECTNESS commit) "
-                         "and exit; engine-module changes are listed for "
-                         "manual review, not auto-attributed")
     args = ap.parse_args()
 
-    if args.suggest_touched is not None:
-        s = suggest_touched(since=args.suggest_touched or None)
-        print(f"# suggested touched list (diff {s['since'][:12]}..HEAD);")
-        print("# review before pinning in tests/test_freshness.py:")
-        for n in s["entries"]:
-            print(n)
-        if s["review"]:
-            print("# engine modules changed — entry impact needs judgment:")
-            for p in s["review"]:
-                print(f"#   {p}")
-        return
-
     lg = last_green(through=args.through)
-    order = staleness_order(through=args.through)
-    excl = {n for n in args.exclude.split(",") if n}
-    order = [n for n in order if n not in excl]
-    if args.stalest is not None:
-        order = order[: args.stalest]
-    for name in order:
+    for name in staleness_order(through=args.through):
         print(f"r{lg[name]:<2d} {name}")
     # Ledger-closure summary: entries in the live registry with no green
     # row ever (should be empty from round 8 on).

@@ -29,47 +29,25 @@ from projetos_etl_spark.sources.io import checkpoint_partitioned, load_table  # 
 SF = "/root/testdata/sf0.001"
 
 
-def _purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(o_custkey, l_suppkey) of every purchase, NULL keys dropped, as
-    each graph entry starts from."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull())
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_suppkey").isNotNull())
-    return o.join(li, o.o_orderkey == li.l_orderkey).select("o_custkey", "l_suppkey")
-
-
-def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LPA / k-core edge list: both directions of each distinct
-    customer-supplier pair, suppliers offset into one integer id space."""
-    from projetos_etl_spark.registry.dedup import LPA_SUPP_BASE
-
-    bip = (
-        _purchases(spark, sf_dir)
-        .select(
-            F.col("o_custkey").cast("long").alias("c"),
-            (F.col("l_suppkey") + F.lit(LPA_SUPP_BASE)).cast("long").alias("s"),
-        )
-        .distinct()
-    )
-    return bip.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        bip.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-
-
 def _lpa_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A joined LPA round: labels from one prior checkpointed round, as
     every round after the first reads them."""
-    from projetos_etl_spark.registry.dedup import _lpa_packable, _lpa_step
+    from projetos_etl_spark.registry.dedup import (
+        _lpa_packable,
+        _lpa_step,
+        _undirected_purchases,
+    )
 
-    und = checkpoint_partitioned(_undirected(spark, sf_dir), "src")
+    und = _undirected_purchases(spark, sf_dir, "src")
     n, packed = und.rdd.getNumPartitions(), _lpa_packable(und)
     labels = checkpoint_partitioned(_lpa_step(und, None, n, packed))
     return _lpa_step(und, labels, n, packed)
 
 
 def _kcore_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from projetos_etl_spark.registry.dedup import _kcore_step
+    from projetos_etl_spark.registry.dedup import _kcore_step, _undirected_purchases
 
-    und = checkpoint_partitioned(_undirected(spark, sf_dir), "dst")
+    und = _undirected_purchases(spark, sf_dir, "dst")
     ids = und.select(F.col("src").alias("id")).distinct()
     alive = ids.select("id", F.lit(True).alias("alive")).localCheckpoint(eager=True)
     return _kcore_step(und, alive)
@@ -77,8 +55,9 @@ def _kcore_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pagerank_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projetos_etl_spark.operators.pagerank import DAMPING, _pr_prep, _pr_step
+    from projetos_etl_spark.registry.dedup import _purchase_pairs
 
-    edges = _purchases(spark, sf_dir).select(
+    edges = _purchase_pairs(spark, sf_dir).select(
         F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
         F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
     )

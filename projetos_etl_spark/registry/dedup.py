@@ -1518,7 +1518,7 @@ def _undirected_purchases(spark: SparkSession, sf_dir: str, key: str) -> DataFra
     distinct customer-supplier pair, suppliers offset by
     ``LPA_SUPP_BASE`` into one long id space. The loops join it on
     ``key`` every round, so it is shuffled onto that key once and
-    checkpointed (``checkpoint_partitioned``, guide §2.4)."""
+    checkpointed (``checkpoint_partitioned``)."""
     bip = (
         _purchase_pairs(spark, sf_dir)
         .select(
@@ -1533,6 +1533,7 @@ def _undirected_purchases(spark: SparkSession, sf_dir: str, key: str) -> DataFra
         ),
         key,
     )
+
 
 #: Packed (count, label) argmax base: cnt*2^32 + (2^32-1-label) orders a
 #: LONG exactly like struct(cnt, -label) — max count first, ties to the
